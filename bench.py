@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -175,37 +176,22 @@ BENCH_FIXED_N = 46  # q1..sample_importance_weighted (rounds 1-5 core)
 # line reported — NEVER omitted, so queries_dropped stays 0; (1) the
 # fixed46 core; (2) the rest, slowest kept first. Full-precision
 # timings for every query always live in bench_results.json.
-PREV_LINE_REPORTED = frozenset(
-    # the 65 queries in BENCH_r12.json's parsed line
-    [
-        "q1_pricing_summary", "q3_shipping_priority", "q10_returned_items",
-        "agg_cube", "agg_grouping_sets", "dedup_minhash", "sim_knn_cosine",
-        "sim_ann_lsh", "stream_tumbling_window", "stream_stateful_user_totals",
-        "q2_min_cost_supplier", "q21_waiting_supplier",
-        "range_join_interval_overlap", "topk_heavy_hitters", "profile_columns",
-        "dedup_minhash_capped", "sim_ann_ivf_fixed", "dq_checks",
-        "dedup_containment", "events_funnel", "embedding_quality_stats",
-        "dedup_chunk_global", "dedup_semantic_semdedup",
-        "pipeline_corpus_curation", "graph_pagerank_bipartite",
-        "events_changepoint_cusum_filled", "dedup_bloom_incremental",
-        "agg_median_mad", "sim_range_search", "graph_degree_distribution",
-        "dq_functional_dependency", "orders_pareto_concentration",
-        "text_surprisal_lm", "dedup_exact_substring_spans",
-        "stream_dedup_minhash", "pipeline_dedup_funnel",
-        "text_boilerplate_chunks", "text_bm25_topk", "graph_triangle_count",
-        "stream_corpus_ingest", "text_inverted_index",
-        "orders_market_basket_rules", "orders_rfm_segments",
-        "cluster_kmeans_lloyd", "sim_ann_ivf_lloyd", "agg_histogram_equidepth",
-        "stream_distinct_kmv", "stream_percentile_grid", "sim_ann_pq_adc",
-        "sim_ann_pq_lloyd", "sim_ann_ivfpq", "events_attribution_touch",
-        "cluster_kmeans_converged", "stream_ann_ingest", "sim_rank_fusion_rrf",
-        "stream_sample_reservoir", "dq_embedding_drift",
-        "sim_ann_ivfpq_residual", "sql_facade_q1_pricing",
-        "sql_facade_join_agg", "sql_facade_manifest_table",
-        "table_changefeed", "stream_table_changefeed", "sql_facade_merge_dml",
-        "stream_changefeed_matview",
-    ]
-)
+def prev_line_reported(root: str | None = None) -> frozenset[str]:
+    """Query names in the newest round's recorded line: the "queries"
+    of the highest-numbered ``BENCH_r<N>.json`` next to this file
+    (``BENCH_r<N>_c8.json`` reruns on another host class are not
+    rounds). Empty when no round is recorded."""
+    root = root or os.path.dirname(os.path.abspath(__file__))
+    rounds = []
+    for name in os.listdir(root):
+        mt = re.fullmatch(r"BENCH_r(\d+)\.json", name)
+        if mt:
+            rounds.append((int(mt.group(1)), name))
+    if not rounds:
+        return frozenset()
+    with open(os.path.join(root, max(rounds)[1])) as fh:
+        return frozenset(json.load(fh)["parsed"]["queries"])
+
 
 # Mid-run drift self-diagnosis (r12 lesson: the driver's 32-core run
 # degraded progressively — untouched controls at positions >=35 read
@@ -534,12 +520,13 @@ def main() -> None:
     # The driver parses the summary from the LAST 2000 chars of stdout
     # (BENCH_r06 lost its whole per-query dict to a 2009-char line).
     # Emit ONE compact line, hard-capped under that window: 1-decimal
-    # timings, short metric, and the PREV_LINE_REPORTED eviction policy
+    # timings, short metric, and the prev_line_reported eviction policy
     # (see its comment) — should the budget still overflow, the FASTEST
     # lowest-priority entries fold into an "omitted" summary (their
     # full timings stay in bench_results.json; "value" always covers
     # every query that ran).
     line_queries = {n: round(t, 1) for n, t in timings.items()}
+    never_evict = prev_line_reported()
     omitted_n, omitted_sec = 0, 0.0
 
     def _line() -> str:
@@ -571,7 +558,7 @@ def main() -> None:
     # the previous round's line is NEVER evicted (priority 0), so the
     # driver's round-over-round diff sees zero dropped queries.
     def _evict_rank(name: str) -> tuple[int, float]:
-        if name in PREV_LINE_REPORTED:
+        if name in never_evict:
             prio = 0
         elif name in fixed_names:
             prio = 1
@@ -581,7 +568,7 @@ def main() -> None:
 
     out = _line()
     for name in sorted(line_queries, key=_evict_rank):
-        if len(out) <= 1990 or name in PREV_LINE_REPORTED:
+        if len(out) <= 1990 or name in never_evict:
             break
         omitted_sec += line_queries.pop(name)
         omitted_n += 1

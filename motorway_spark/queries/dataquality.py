@@ -135,9 +135,10 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: per fact table, one conditional aggregate evaluates all
     of its row-level predicates in a single scan (``count_if`` columns,
-    pure codegen); uniqueness runs as its own distinct-only aggregate so
-    the RewriteDistinctAggregates Expand never touches the conditional
-    buffers; FK checks are key-only LEFT ANTI joins (column-pruned to
+    pure codegen), with PK uniqueness folded into the same aggregate as
+    one count-distinct column (a single distinct aggregate does not
+    trigger the multi-distinct Expand); FK checks are key-only LEFT
+    ANTI joins (column-pruned to
     the join keys). Every intermediate is a one-row DataFrame, so the
     assembly cross-joins broadcast single rows and stacks them to the
     report layout — no data-sized join anywhere."""

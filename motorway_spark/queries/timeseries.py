@@ -461,10 +461,11 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion dashboard (the reference's vendor domain: Plecto builds
     KPI dashboards; motorway feeds them — README.md:8).
 
-    Shape: each stage is a user-keyed equality join (events ⋈ previous
-    stage's entry times) + min-aggregate — co-partitioned on user_id, so
-    a 100 TB event log funnels with 3 hash joins on the same key and no
-    all-history window sort. Timestamps compare as exact
+    Shape: each stage's entry time is a per-user window minimum over
+    the events qualifying against the previous stage's entry time, all
+    three windows and the per-user rollup sharing ONE user_id exchange,
+    so a 100 TB event log funnels with one scan, one shuffle and no
+    join. Timestamps compare as exact
     microsecond instants; counts are integers; the conversion fractions
     are single integer/integer IEEE divisions — bit-identical
     cross-engine."""

@@ -32,17 +32,16 @@ OPTIMISTIC CONCURRENCY rung:
   deletes a file any committed manifest entry lists; files not listed
   by the CURRENT manifest are invisible to current readers — a crashed
   writer's orphans, or the RETAINED prior versions a commit replaced
-  (kept for ``read_version()`` time travel; see
-  RETAIN_REPLACED_FILES) — and are reclaimed by ``vacuum()`` once
-  older than its retention window.
+  (kept for ``read_version()`` time travel) — and are reclaimed by
+  ``vacuum()`` once older than its retention window.
 - **The commit point is a numbered log record**, created atomically
   AND exclusively: ``_mlog/<seq>.delta.json`` is written to a temp
   name and ``os.link``ed into place — link fails loudly (EEXIST) if
   another writer took that sequence number first. One record per
   commit, O(|touched|) bytes: the touched buckets' new entries (file
-  list + footer stats), the files they replaced, the batch id, and the
-  schema when it changed. Torn log lines are structurally impossible:
-  a record is either fully linked into the log or absent.
+  list + footer stats), the batch id, and the schema when it changed.
+  Torn log lines are structurally impossible: a record is either fully
+  linked into the log or absent.
 - **The manifest view** = newest ``_mlog/<seq>.ckpt.json`` checkpoint
   + the ordered replay of delta records above its seq. Checkpoints are
   written every ``_LOG_COMPACT_EVERY`` commits (and at bootstrap) and
@@ -60,10 +59,8 @@ OPTIMISTIC CONCURRENCY rung:
        next sequence number with the same record — its staged files
        and entries are still valid, no Spark work is repeated.
   A conflict can also surface EARLIER than the link: a replaced file
-  the loser's staging job is still scanning may vanish mid-scan — in
-  eager-cleanup mode (RETAIN_REPLACED_FILES=False) from the winner's
-  post-commit delete, in the default retention mode only from a
-  concurrent ``vacuum`` aging it out — that FileNotFoundException is
+  the loser's staging job is still scanning may vanish mid-scan when a
+  concurrent ``vacuum`` ages it out — that FileNotFoundException is
   caught and resolved identically to case 2.
   Crash windows are benign by construction: a crash before the link
   leaves only invisible orphan files; a crash after the link leaves a
@@ -79,12 +76,14 @@ pruned merge reads, and delete_keys' schema lookup are all
 O(manifest) (the _mlog dir itself is listed, but it is bounded by the
 compaction window, never by table size). Externally mutilated buckets
 (listed files missing from disk) are detected per-read by stat()
-(HEAD-class) and healed by re-listing ONLY that bucket. Tables written
-before manifests existed (legacy ``_manifest.json`` +
-``_manifest.log`` JSONL, or no manifest at all) are adopted by a
-one-time full-listing bootstrap checkpoint; the legacy log is replayed
-read-only (a torn tail line is ignored — nothing ever appends to it
-again) and absorbed into the first checkpoint.
+(HEAD-class) and healed by re-listing ONLY that bucket.
+
+The ``_mlog/`` log is the table's only on-disk format. A table starts
+as an empty checkpoint 0, linked by its first writer before any data
+file is staged — so ``bucket=`` dirs under ``data/`` with no log mean
+the log was lost over live data. Every entry point refuses such a
+table (ValueError) instead of reading it as empty, which would let a
+write shadow the data and ``vacuum()`` reclaim it.
 """
 
 from __future__ import annotations
@@ -107,10 +106,10 @@ _MLOG_RE = re.compile(r"^(\d{20})\.(delta|ckpt)\.json$")
 
 def _is_vanished_file_error(exc: Exception) -> bool:
     """True when a Spark job died because an input file disappeared
-    mid-scan — the signature of racing a concurrent winner's
-    post-commit cleanup of the files our snapshot listed. The caller
-    redoes against the fresh snapshot (whose heal path also covers the
-    other cause, genuine external deletion)."""
+    mid-scan — the signature of racing a concurrent ``vacuum`` that
+    aged out a file our snapshot listed. The caller redoes against the
+    fresh snapshot (whose heal path also covers the other cause,
+    genuine external deletion)."""
     s = str(exc)
     return "FileNotFoundException" in s or "does not exist" in s
 
@@ -153,14 +152,14 @@ class UpsertParquetSink:
         write attempt). This is the entry point for consumers that
         only know the directory — e.g. ``motorway_spark.sql(...,
         tables={"t": dir})`` registering a sink table as a catalog
-        view."""
+        view. Loading the manifest is pure file I/O, so ``spark`` may
+        be None for a metadata-only handle (the changefeed source)."""
         sink = cls(spark, table_dir, key_cols=[], num_buckets=None)
         m = sink._load_manifest()
         if m is None:
             raise ValueError(
                 f"{table_dir} has no manifest — not an UpsertParquetSink "
-                "table (or written before manifests existed; write to it "
-                "once with an explicit sink to adopt it)"
+                "table, or one never written to"
             )
         sink.key_cols = list(m.get("key_cols") or [])
         return sink
@@ -181,9 +180,6 @@ class UpsertParquetSink:
         self.table_dir = table_dir.rstrip("/")
         self.key_cols = key_cols
         self.num_buckets = num_buckets
-        self._meta = f"{self.table_dir}/_upsert_meta.json"  # legacy, read-only
-        self._manifest_path = f"{self.table_dir}/_manifest.json"  # legacy base
-        self._manifest_log = f"{self.table_dir}/_manifest.log"  # legacy JSONL
         self._mlog_dir = f"{self.table_dir}/_mlog"
         # parsed-manifest cache, revalidated against the log listing
         self._m_cache: dict | None = None
@@ -205,18 +201,9 @@ class UpsertParquetSink:
         self._ckpt_seq = -1  # seq of the checkpoint the view is based on
         self._delta_touch: dict[int, frozenset[str]] = {}  # seq -> bucket keys
 
-    # -- replay state ----------------------------------------------------
-    def _legacy_meta_batches(self) -> set[int]:
-        try:
-            with open(self._meta) as fh:
-                return set(json.load(fh)["batches"])
-        except (OSError, json.JSONDecodeError, KeyError):
-            return set()
-
     def _processed_batches(self) -> set[int]:
         m = self._load_manifest()
-        committed = set(m["batches"]) if m else set()
-        return committed | self._legacy_meta_batches()
+        return m["batches"] if m else set()
 
     def _data_dir(self) -> str:
         return f"{self.table_dir}/data"
@@ -253,27 +240,19 @@ class UpsertParquetSink:
         return ckpts, deltas
 
     def _fs_stat(self):
-        """Cache validity token: legacy file stats + the newest
-        checkpoint's name + the names of log records ABOVE it. The dir
-        itself may hold up to ``LOG_RETENTION_SEC`` of RETAINED folded
-        records (they are pure namespace reservations — readers skip
-        seq <= ckpt, so their presence or later removal never changes
-        the view), plus writers' transient ``.tmp-*`` files; both are
+        """Cache validity token: the newest checkpoint's name + the
+        names of log records ABOVE it. The dir itself may hold up to
+        ``LOG_RETENTION_SEC`` of RETAINED folded records (they are
+        pure namespace reservations — readers skip seq <= ckpt, so
+        their presence or later removal never changes the view), plus
+        writers' transient ``.tmp-*`` files; both are
         EXCLUDED so the token stays bounded by the compaction window
         and a concurrent writer's tmp churn can't thrash the cache.
         Name-based (not a dir mtime): immune to mtime granularity."""
-
-        def st(p):
-            try:
-                s = os.stat(p)
-                return (s.st_mtime_ns, s.st_size)
-            except OSError:
-                return None
-
         try:
             names = os.listdir(self._mlog_dir)
         except OSError:
-            return (st(self._manifest_path), st(self._manifest_log), None, None)
+            return (None, None)
         top_ckpt = None
         top_seq = -1
         parsed = []
@@ -286,42 +265,7 @@ class UpsertParquetSink:
             if mt.group(2) == "ckpt" and seq > top_seq:
                 top_seq, top_ckpt = seq, n
         tail = tuple(sorted(n for seq, n in parsed if seq > top_seq))
-        return (st(self._manifest_path), st(self._manifest_log), top_ckpt, tail)
-
-    def _load_legacy_base(self) -> dict | None:
-        """Pre-_mlog tables: `_manifest.json` base + `_manifest.log`
-        JSONL replay, READ-ONLY (nothing appends to these anymore, so
-        the historical torn-tail-append fusion hazard is gone; a torn
-        tail line left by an old crash is still skipped on replay)."""
-        try:
-            with open(self._manifest_path) as fh:
-                loaded = json.load(fh)
-            if loaded.get("version") != 1:
-                return None
-        except (OSError, json.JSONDecodeError):
-            return None
-        m = loaded
-        m.setdefault("batches", [])
-        try:
-            with open(self._manifest_log) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        rec = json.loads(line)
-                    except json.JSONDecodeError:
-                        break  # torn tail from an old crash mid-append
-                    if rec.get("schema"):
-                        m["schema"] = rec["schema"]
-                    for k, ent in rec.get("buckets", {}).items():
-                        if ent is None:
-                            m["buckets"].pop(k, None)
-                        else:
-                            m["buckets"][k] = ent
-        except OSError:
-            pass
-        return m
+        return (top_ckpt, tail)
 
     def _read_state(self):
         """One coherent manifest view: newest checkpoint + ordered
@@ -330,19 +274,15 @@ class UpsertParquetSink:
         newer checkpoint that covers the removed records)."""
         ckpts, deltas = self._list_mlog()
         touch: dict[int, frozenset[str]] = {}
-        if ckpts:
-            ckpt_seq, path = ckpts[-1]
-            with open(path) as fh:
-                m = json.load(fh)
-        else:
-            m = self._load_legacy_base()
-            ckpt_seq = 0 if m is not None else -1
-            if m is None and deltas:
-                # deltas can only exist above a bootstrap checkpoint;
-                # its absence from this listing means cleanup raced us
+        if not ckpts:
+            if deltas:
+                # deltas only exist above the bootstrap checkpoint; its
+                # absence from this listing means cleanup raced us
                 raise _MlogGap(self._mlog_dir)
-        if m is None:
             return None, -1, -1, touch
+        ckpt_seq, path = ckpts[-1]
+        with open(path) as fh:
+            m = json.load(fh)
         batches = set(m.get("batches", []))
         head = ckpt_seq
         for seq, path in deltas:
@@ -352,15 +292,7 @@ class UpsertParquetSink:
                 raise _MlogGap(f"missing seq {head + 1} in {self._mlog_dir}")
             with open(path) as fh:
                 rec = json.load(fh)
-            if rec.get("schema"):
-                m["schema"] = rec["schema"]
-            if rec.get("num_buckets") is not None:
-                m["num_buckets"] = rec["num_buckets"]  # rebucket record
-            for k, ent in rec.get("buckets", {}).items():
-                if ent is None:
-                    m["buckets"].pop(k, None)
-                else:
-                    m["buckets"][k] = ent
+            self._fold_record(m, rec)
             if rec.get("batch_id") is not None:
                 batches.add(rec["batch_id"])
             touch[seq] = frozenset(rec.get("buckets", {}))
@@ -373,7 +305,9 @@ class UpsertParquetSink:
         (another writer's commit changes the listing and forces a
         reload; a warm single-writer pays one tiny-dir listdir per
         call, no parsing). ``force`` bypasses the cache — required
-        after losing a commit race, where the listing is known stale."""
+        after losing a commit race, where the listing is known stale.
+        None = a table never written; raises when ``data/`` holds
+        bucket dirs but the log is gone (see the module docstring)."""
         cur = self._fs_stat()
         if not force and self._m_stat == cur:
             return self._m_cache
@@ -388,6 +322,15 @@ class UpsertParquetSink:
         else:
             raise RuntimeError(
                 f"manifest log chain has a persistent gap: {last}"
+            )
+        if m is None and self._has_bucket_dirs():
+            # a first writer links checkpoint 0 before it stages any
+            # file: re-scan once for a racing first writer's checkpoint
+            if self._list_mlog()[0]:
+                return self._load_manifest(force=True)
+            raise ValueError(
+                f"{self.table_dir} holds data files but no manifest log "
+                "(_mlog/): refusing to treat it as an empty table"
             )
         if m is not None and self.num_buckets is None:
             # opened via open(): adopt the table's own recorded count
@@ -432,15 +375,7 @@ class UpsertParquetSink:
 
     def _apply_to_cache(self, seq: int, rec: dict) -> None:
         m = self._m_cache
-        if rec.get("schema"):
-            m["schema"] = rec["schema"]
-        if rec.get("num_buckets") is not None:
-            m["num_buckets"] = rec["num_buckets"]
-        for k, ent in rec.get("buckets", {}).items():
-            if ent is None:
-                m["buckets"].pop(k, None)
-            else:
-                m["buckets"][k] = ent
+        self._fold_record(m, rec)
         if rec.get("batch_id") is not None:
             m["batches"].add(rec["batch_id"])
         self._delta_touch[seq] = frozenset(rec.get("buckets", {}))
@@ -451,14 +386,9 @@ class UpsertParquetSink:
         # into the token while missing from the cached view, leaving
         # the cache stale forever. With the constructed token, their
         # file makes the token mismatch and forces a reload.
-        base_st, log_st, top_ckpt, tail = self._m_stat
+        top_ckpt, tail = self._m_stat
         ours = f"{seq:020d}.delta.json"
-        self._m_stat = (
-            base_st,
-            log_st,
-            top_ckpt,
-            tuple(sorted((tail or ()) + (ours,))),
-        )
+        self._m_stat = (top_ckpt, tuple(sorted((tail or ()) + (ours,))))
 
     def _try_commit(
         self,
@@ -528,7 +458,7 @@ class UpsertParquetSink:
     def _write_checkpoint(self) -> None:
         """Fold the current view into `_mlog/<head>.ckpt.json`; remove
         the records it covers only once they are older than
-        ``LOG_RETENTION_SEC`` (see above), plus any legacy base/log.
+        ``LOG_RETENTION_SEC`` (see above).
         Two writers checkpointing the same head race benignly: same
         seq = same folded state, either link wins, loser skips. A
         reader holding the OLD checkpoint that sees aged records
@@ -549,7 +479,7 @@ class UpsertParquetSink:
             "key_cols": m.get("key_cols") or self.key_cols or None,
             "schema": m.get("schema"),
             "buckets": m["buckets"],
-            "batches": sorted(m["batches"] | self._legacy_meta_batches()),
+            "batches": sorted(m["batches"]),
         }
         self._link_record(head, "ckpt", snap)
         horizon = time.time() - self.LOG_RETENTION_SEC
@@ -573,64 +503,47 @@ class UpsertParquetSink:
                     os.remove(path)
                 except OSError:
                     pass
-        for legacy in (self._manifest_path, self._manifest_log, self._meta):
-            try:
-                os.remove(legacy)
-            except OSError:
-                pass
         self._ckpt_seq = head
         self._delta_touch = {}
-        m["batches"] = set(snap["batches"])
         # a concurrent commit may land during our cleanup; poison the
         # token so the next access reparses (once per compaction)
         self._m_stat = ("ckpt-dirty",)
 
     def _bootstrap_manifest(self) -> dict:
-        """First manifest for this table: checkpoint 0 adopting every
-        live bucket (one full listing, once per table lifetime — a
-        pre-manifest table upgraded mid-life must not lose its
-        untouched buckets). Raced bootstraps collapse: seq 0 is
-        exclusively linked, the loser loads the winner's (equivalent)
-        checkpoint."""
-        try:
-            with open(self._meta) as fh:
-                legacy_n = json.load(fh).get("num_buckets")
-        except (OSError, json.JSONDecodeError):
-            legacy_n = None
-        if legacy_n is not None and legacy_n != self.num_buckets:
-            raise ValueError(
-                f"sink constructed with num_buckets={self.num_buckets} over "
-                f"a legacy table written with num_buckets={legacy_n}; keys "
-                "would hash to the wrong buckets"
-            )
-        buckets = {}
-        schema = None
-        ks = sorted(self._bucket_dirs_ids())
-        if ks:
-            schema = self.spark.read.parquet(self._data_dir()).schema.json()
-        for k in ks:
-            ent = self._bucket_entry(k)
-            if ent is not None:
-                buckets[str(k)] = ent
+        """First manifest for this table: an empty checkpoint 0, linked
+        only while ``data/`` holds no bucket dir. A first writer links
+        it BEFORE staging any file, so bucket dirs mean checkpoint 0
+        exists already (a racing first writer's, which the forced
+        reload finds) or the log was lost (the reload refuses). Raced
+        bootstraps collapse: seq 0 is exclusively linked, the loser
+        loads the winner's (identical) checkpoint."""
         if self.num_buckets is None:
             raise ValueError(
                 f"{self.table_dir} has no manifest and this sink was "
                 "opened without a bucket count; construct it explicitly "
-                "with key_cols and num_buckets to create/adopt the table"
+                "with key_cols and num_buckets to create the table"
             )
-        snap = {
-            "version": 1,
-            "seq": 0,
-            "num_buckets": self.num_buckets,
-            "key_cols": self.key_cols or None,
-            "schema": schema,
-            "buckets": buckets,
-            "batches": sorted(self._legacy_meta_batches()),
-        }
-        self._link_record(0, "ckpt", snap)
+        if not self._has_bucket_dirs():
+            snap = {
+                "version": 1,
+                "seq": 0,
+                "num_buckets": self.num_buckets,
+                "key_cols": self.key_cols or None,
+                "schema": None,
+                "buckets": {},
+                "batches": [],
+            }
+            self._link_record(0, "ckpt", snap)
         m = self._load_manifest(force=True)
         assert m is not None
         return m
+
+    def _has_bucket_dirs(self) -> bool:
+        try:
+            names = os.listdir(self._data_dir())
+        except OSError:
+            return False
+        return any(n.startswith("bucket=") for n in names)
 
     # -- footer stats ------------------------------------------------------
     @staticmethod
@@ -638,7 +551,7 @@ class UpsertParquetSink:
         """True when the values order consistently against each other:
         all numeric (int/float, bool excluded) or all strings. Guards
         every exact-stat comparison against a schema that changed type
-        under a legacy entry."""
+        under an older entry."""
         if all(
             isinstance(v, (int, float)) and not isinstance(v, bool)
             for v in vals
@@ -743,7 +656,7 @@ class UpsertParquetSink:
         )
 
     def _heal_manifest(self, m: dict, buckets: list[int]) -> None:
-        """Re-list ONLY the stale buckets and adopt what is live (best
+        """Re-list ONLY the stale buckets and record what is live (best
         effort under external mutation); committed as one O(|stale|)
         record through the same optimistic path."""
         rec: dict = {"op": "heal", "batch_id": None, "buckets": {}}
@@ -775,31 +688,24 @@ class UpsertParquetSink:
         return out
 
     def table_schema(self):
-        """The table's schema without any file listing: manifest-first,
-        falling back to parquet inference for pre-manifest tables."""
+        """The table's schema from the manifest, without any file
+        listing; empty for a table never written."""
         from pyspark.sql.types import StructType
 
         m = self._load_manifest()
-        if m and m.get("schema"):
-            full = StructType.fromJson(json.loads(m["schema"]))
-            return StructType([f for f in full.fields if f.name != "bucket"])
-        return StructType(
-            [
-                f
-                for f in self.spark.read.parquet(self._data_dir()).schema.fields
-                if f.name != "bucket"
-            ]
-        )
+        if not (m and m.get("schema")):
+            return StructType([])
+        full = StructType.fromJson(json.loads(m["schema"]))
+        return StructType([f for f in full.fields if f.name != "bucket"])
 
     def row_count(self) -> int:
         """Exact row count straight from manifest stats — no scan, no
         listing (the lakehouse ``SELECT COUNT(*)`` fast path)."""
         m = self._load_manifest()
-        if m is not None:
-            m = self._heal_if_stale(m, [int(k) for k in m["buckets"]])
-            return sum(e["rows"] for e in m["buckets"].values())
-        df = self.read()
-        return 0 if df is None else df.count()
+        if m is None:
+            return 0
+        m = self._heal_if_stale(m, [int(k) for k in m["buckets"]])
+        return sum(e["rows"] for e in m["buckets"].values())
 
     def _manifest_reader(self, m: dict):
         """Parquet reader pinned to the MANIFEST's schema when recorded:
@@ -817,21 +723,16 @@ class UpsertParquetSink:
         return reader
 
     def read(self) -> DataFrame | None:
-        # A delete that removes the last row empties the manifest but
-        # may leave data/ itself; parquet schema inference on an empty
-        # directory would raise, so an empty table reads as None.
+        """The current table, read from the manifest's file list; None
+        when it holds no rows (never written, or emptied by deletes)."""
         m = self._load_manifest()
-        if m is not None:
-            m = self._heal_if_stale(m, [int(k) for k in m["buckets"]])
-            paths = self._manifest_paths(
-                m, sorted(int(k) for k in m["buckets"])
-            )
-            if not paths:
-                return None
-            return self._manifest_reader(m).parquet(*paths).drop("bucket")
-        if not self._bucket_dirs_ids():
+        if m is None:
             return None
-        return self.spark.read.parquet(self._data_dir()).drop("bucket")
+        m = self._heal_if_stale(m, [int(k) for k in m["buckets"]])
+        paths = self._manifest_paths(m, sorted(int(k) for k in m["buckets"]))
+        if not paths:
+            return None
+        return self._manifest_reader(m).parquet(*paths).drop("bucket")
 
     # -- time travel ---------------------------------------------------
     def history(self) -> list[dict]:
@@ -871,17 +772,13 @@ class UpsertParquetSink:
         for cseq, cpath in ckpts:
             if base_seq < cseq <= as_of:
                 base_seq, base_path = cseq, cpath
-        if base_path is not None:
-            with open(base_path) as fh:
-                m = json.load(fh)
-        else:
-            m = self._load_legacy_base()
-            base_seq = 0 if m is not None else -1
-            if m is None:
-                raise ValueError(
-                    f"version {as_of}: no checkpoint at or below it is "
-                    "retained — out of log retention"
-                )
+        if base_path is None:
+            raise ValueError(
+                f"version {as_of}: no checkpoint at or below it is "
+                "retained — out of log retention"
+            )
+        with open(base_path) as fh:
+            m = json.load(fh)
         head = base_seq
         for seq, path in deltas:
             if seq <= base_seq or seq > as_of:
@@ -944,8 +841,10 @@ class UpsertParquetSink:
     @staticmethod
     def _fold_record(m: dict, rec: dict) -> None:
         """Fold one delta record into manifest state ``m`` — the one
-        replay algebra, shared by time travel (``_state_at``) and the
-        changefeed plan so they can never diverge."""
+        replay algebra, shared by the live view (``_read_state``,
+        ``_apply_to_cache``), time travel (``_state_at``) and the
+        changefeed plan so they can never diverge. The batch-id set is
+        the live view's own concern."""
         if rec.get("schema"):
             m["schema"] = rec["schema"]
         if rec.get("num_buckets") is not None:
@@ -955,25 +854,6 @@ class UpsertParquetSink:
                 m["buckets"].pop(k, None)
             else:
                 m["buckets"][k] = ent
-
-    def _base_state(self, since_seq: int) -> dict:
-        """Manifest state AFTER commit ``since_seq`` (-1 = the empty
-        pre-history state). Falls back to an empty-base replay for
-        fresh tables that have no checkpoint yet."""
-        if since_seq < 0:
-            return {"buckets": {}, "schema": None}
-        try:
-            return self._state_at(since_seq)
-        except ValueError:
-            _ckpts, deltas = self._list_mlog()
-            avail = dict(deltas)
-            if avail and all(s in avail for s in range(since_seq + 1)):
-                m: dict = {"buckets": {}, "schema": None}
-                for s in range(since_seq + 1):
-                    with open(avail[s]) as fh:
-                        self._fold_record(m, json.load(fh))
-                return m
-            raise
 
     def changes_plan(
         self, since_seq: int = -1, to_seq: int | None = None
@@ -999,67 +879,38 @@ class UpsertParquetSink:
         log record has aged out of log retention (the Delta-CDF
         contract: a feed must be consumed within the retention
         windows; restart from a current snapshot otherwise)."""
-        _ckpts, deltas = self._list_mlog()
+        ckpts, deltas = self._list_mlog()
         avail = dict(deltas)
         head = max(
             [s for s, _ in deltas],
-            default=max([s for s, _ in _ckpts], default=-1),
+            default=max([s for s, _ in ckpts], default=-1),
         )
         if to_seq is None:
             to_seq = head
-        state = self._base_state(since_seq) if to_seq > since_seq else None
-        if state is None:
+        if to_seq <= since_seq:
             m = self._load_manifest()
             return [], (m or {}).get("schema")
-        ckpt_avail = dict(_ckpts)
+        state = (
+            self._state_at(since_seq)
+            if since_seq >= 0
+            else {"buckets": {}, "schema": None}
+        )
         items: list[dict] = []
         for seq in range(since_seq + 1, to_seq + 1):
             path = avail.get(seq)
             if path is None:
-                # a seq with a CHECKPOINT but no delta is a state
-                # snapshot, not a commit: the bootstrap ckpt (seq 0 on
-                # a fresh table, possibly non-empty when adopting
-                # pre-existing data — those rows become inserts AT the
-                # adoption seq), or a fold whose covered deltas aged
-                # out (refused: the feed's per-commit granularity is
-                # gone; net-diffing would silently change semantics)
-                cpath = ckpt_avail.get(seq)
-                if cpath is None:
-                    raise ValueError(
-                        f"change record {seq} has aged out of log "
-                        "retention — restart the changefeed from a "
-                        "current snapshot"
-                    )
-                if state["buckets"]:
-                    raise ValueError(
-                        f"records folded into checkpoint {seq} have "
-                        "aged out of log retention — restart the "
-                        "changefeed from a current snapshot"
-                    )
-                with open(cpath) as fh:
-                    ck = json.load(fh)
-                boot: dict[int, tuple[list[str], list[str]]] = {}
-                for k, ent in ck.get("buckets", {}).items():
-                    if ent and ent["files"]:
-                        base = f"{self._data_dir()}/bucket={k}"
-                        boot[int(k)] = (
-                            [],
-                            [f"{base}/{f}" for f in ent["files"]],
-                        )
-                if boot:
-                    items.append(
-                        {
-                            "seq": seq,
-                            "op": "bootstrap",
-                            "batch_id": None,
-                            "buckets": boot,
-                        }
-                    )
-                state = {
-                    "buckets": dict(ck.get("buckets", {})),
-                    "schema": ck.get("schema"),
-                }
-                continue
+                # only the bootstrap checkpoint 0 has no delta of its
+                # own, and it is empty; any other hole is a fold whose
+                # records aged out (refused: the feed's per-commit
+                # granularity is gone; net-diffing would silently
+                # change semantics)
+                if seq == 0 and ckpts and ckpts[0][0] == 0:
+                    continue
+                raise ValueError(
+                    f"change record {seq} has aged out of log "
+                    "retention — restart the changefeed from a "
+                    "current snapshot"
+                )
             with open(path) as fh:
                 rec = json.load(fh)
             op = rec.get("op")
@@ -1282,27 +1133,9 @@ class UpsertParquetSink:
         )
 
     def _table_empty(self) -> bool:
-        """Emptiness without a listing when a manifest exists."""
+        """Emptiness from the manifest, without a listing."""
         m = self._load_manifest()
-        if m is not None:
-            return not m["buckets"]
-        return not self._bucket_dirs_ids()
-
-    def _bucket_dirs_ids(self) -> list[int]:
-        """Live bucket ids from a directory listing (bootstrap/legacy
-        fallback only). Tolerates leftover junk like ``bucket=3.old``
-        from pre-rewrite crash windows: only exact ``bucket=<int>``
-        names are buckets."""
-        try:
-            names = os.listdir(self._data_dir())
-        except OSError:
-            return []
-        out = []
-        for d in names:
-            mt = _BUCKET_DIR_RE.match(d)
-            if mt:
-                out.append(int(mt.group(1)))
-        return out
+        return m is None or not m["buckets"]
 
     def _read_buckets(
         self, m: dict, affected: list[int], *, heal: bool = True
@@ -1323,7 +1156,6 @@ class UpsertParquetSink:
     # -- additive staging ---------------------------------------------------
     def _stage(
         self,
-        m: dict,
         new_df: DataFrame,
         affected: list[int],
         *,
@@ -1336,10 +1168,10 @@ class UpsertParquetSink:
         the delete paths need this; the merge path never shrinks a
         bucket to zero (merge output ⊇ batch).
 
-        Returns (entries, replaced, staged_paths): the new manifest
-        entries, the snapshot's file names they supersede (deleted only
-        after the commit wins), and the staged files' absolute paths
-        (deleted if the commit is abandoned)."""
+        Returns (entries, staged_paths): the new manifest entries and
+        the staged files' absolute paths (deleted if the commit is
+        abandoned). The files the entries supersede stay on disk for
+        time travel until ``vacuum()`` ages them out."""
         data_dir = self._data_dir()
         tmp = tempfile.mkdtemp(
             prefix="upsert_", dir=os.path.dirname(self.table_dir) or "."
@@ -1351,17 +1183,13 @@ class UpsertParquetSink:
             raise
         tag = uuid.uuid4().hex[:12]
         entries: dict[str, dict | None] = {}
-        replaced: dict[str, list[str]] = {}
         staged: list[str] = []
         for k in affected:
             src = os.path.join(tmp, f"bucket={k}")
             live = os.path.join(data_dir, f"bucket={k}")
-            old = m["buckets"].get(str(k))
-            old_files = list(old["files"]) if old else []
             if not os.path.isdir(src):
                 if drop_missing:
                     entries[str(k)] = None
-                    replaced[str(k)] = old_files
                 continue
             os.makedirs(live, exist_ok=True)
             moved = []
@@ -1373,9 +1201,8 @@ class UpsertParquetSink:
                 moved.append(name)
                 staged.append(os.path.join(live, name))
             entries[str(k)] = self._bucket_entry(k, files=moved)
-            replaced[str(k)] = old_files
         shutil.rmtree(tmp, ignore_errors=True)
-        return entries, replaced, staged
+        return entries, staged
 
     def _delete_staged(self, staged: list[str]) -> None:
         for p in staged:
@@ -1383,40 +1210,6 @@ class UpsertParquetSink:
                 os.remove(p)
             except OSError:
                 pass
-
-    # Replaced data files are RETAINED on disk after a commit (they are
-    # unlisted, hence invisible to every current reader) and reclaimed
-    # by vacuum() once older than its retention window. Retention is
-    # what gives the log TIME TRAVEL: read_version(seq) can re-resolve
-    # a historical manifest's file lists for as long as both the log
-    # records (LOG_RETENTION_SEC) and the files (VACUUM_RETENTION_SEC)
-    # survive — the Delta VACUUM-bounds-time-travel contract exactly.
-    # False restores the old eager delete-on-commit behavior (smallest
-    # possible footprint, no time travel, correct either way).
-    RETAIN_REPLACED_FILES = True
-
-    def _cleanup_replaced(
-        self, entries: dict, replaced: dict[str, list[str]]
-    ) -> None:
-        """Post-commit: the files our commit superseded become
-        unlisted — invisible by design — and are either retained for
-        time travel (default; vacuum reclaims them later) or deleted
-        eagerly when RETAIN_REPLACED_FILES is off. A crash here merely
-        leaves orphans for vacuum()."""
-        if self.RETAIN_REPLACED_FILES:
-            return
-        for k, files in replaced.items():
-            live = os.path.join(self._data_dir(), f"bucket={k}")
-            for f in files:
-                try:
-                    os.remove(os.path.join(live, f))
-                except OSError:
-                    pass
-            if entries.get(k) is None:
-                try:
-                    os.rmdir(live)
-                except OSError:
-                    pass  # orphans keep it alive; they are invisible
 
     def _commit_write(
         self,
@@ -1445,15 +1238,15 @@ class UpsertParquetSink:
         stats that make the append proof sound for string keys."""
         schema_json = new_df.schema.json()
         try:
-            entries, replaced, staged = self._stage(
-                m, new_df, affected, drop_missing=drop_missing
+            entries, staged = self._stage(
+                new_df, affected, drop_missing=drop_missing
             )
         except Exception as exc:  # noqa: BLE001 - narrowed below
             if _is_vanished_file_error(exc):
-                # a concurrent winner's cleanup deleted a file our
-                # snapshot listed while our staging job was scanning it
-                # — same resolution as losing the link race on an
-                # overlapping bucket: redo from the fresh snapshot
+                # a concurrent vacuum aged out a file our snapshot
+                # listed while our staging job was scanning it — same
+                # resolution as losing the link race on an overlapping
+                # bucket: redo from the fresh snapshot
                 self._load_manifest(force=True)
                 return "conflict"
             raise
@@ -1467,9 +1260,7 @@ class UpsertParquetSink:
                 for k, ent in entries.items()
                 if ent is not None
             }
-            replaced = {k: [] for k in entries}
-        rec: dict = {"op": op, "batch_id": batch_id, "buckets": entries,
-                     "replaced": replaced}
+        rec: dict = {"op": op, "batch_id": batch_id, "buckets": entries}
         if rec_extra:
             rec.update(rec_extra)
         if m.get("schema") != schema_json:
@@ -1480,7 +1271,6 @@ class UpsertParquetSink:
                 rec["schema"] = schema_json
         status = self._try_commit(rec, read_seq, set(entries), batch_id)
         if status == "ok":
-            self._cleanup_replaced(entries, replaced)
             self._maybe_compact()
         else:
             self._delete_staged(staged)
@@ -1718,7 +1508,7 @@ class UpsertParquetSink:
             m = self._load_manifest()
             if m is None:
                 m = self._bootstrap_manifest()
-            if batch_id in m["batches"] | self._legacy_meta_batches():
+            if batch_id in m["batches"]:
                 batch_df.foreach(lambda _row: None)
                 return
             # heal BEFORE pinning the read snapshot: a heal commits a
@@ -1836,7 +1626,8 @@ class UpsertParquetSink:
         sink-computed klo/khi when present — recorded at write time
         from the rows themselves, so sound for STRING keys (the doc-id
         ingest shape) — falling back to parquet footer min/max for
-        entries written before exact stats existed, where only NUMERIC
+        healed entries and those written before exact stats existed,
+        where only NUMERIC
         keys are trusted (footer string stats may be truncated, which
         would make the proof unsound). A bucket holding NULL-key rows
         is still provable: its klo/khi bound the non-null keys, and a
@@ -1882,7 +1673,7 @@ class UpsertParquetSink:
         job: a merge's output keys are exactly target-keys ∪ batch-keys
         (an upsert never drops a key), so the staged range is the union
         of the bucket's recorded exact range and the batch's. Buckets
-        whose snapshot entry lacks exact stats (adopted / pre-feature
+        whose snapshot entry lacks exact stats (healed / pre-feature
         files) stay unknown and simply don't get klo/khi — see
         recompute_key_stats() for the backfill."""
         if not branges:
@@ -2243,9 +2034,8 @@ class UpsertParquetSink:
 
     def vacuum(self, retention_sec: float | None = None) -> int:
         """Remove invisible garbage: data files no manifest entry
-        lists (crashed writers' orphans, replaced files whose cleanup
-        crashed) and leftover non-live dirs like ``bucket=3.old`` from
-        pre-rewrite crash windows. Returns the number of files removed.
+        lists (crashed writers' orphans, and the replaced files
+        retained for time travel). Returns the number of files removed.
 
         Safe against committed state by construction — it deletes only
         what no reader can reach. Safe against CONCURRENT writers by
@@ -2283,20 +2073,9 @@ class UpsertParquetSink:
             return 0
         for d in names:
             mt = _BUCKET_DIR_RE.match(d)
-            full = os.path.join(data_dir, d)
             if not mt:
-                if d.startswith("bucket=") and os.path.isdir(full):
-                    # pre-rewrite crash leftovers (bucket=K.old): gone
-                    # wholesale once every file inside has aged out
-                    inner = [
-                        os.path.join(r, f)
-                        for r, _, fs in os.walk(full)
-                        for f in fs
-                    ]
-                    if all(_expired(p) for p in inner):
-                        removed += len(inner)
-                        shutil.rmtree(full, ignore_errors=True)
                 continue
+            full = os.path.join(data_dir, d)
             ent = m["buckets"].get(mt.group(1))
             listed = set(ent["files"]) if ent else set()
             for f in os.listdir(full):
@@ -2378,9 +2157,9 @@ class UpsertParquetSink:
     @_locked
     def recompute_key_stats(self) -> int:
         """Backfill exact per-bucket key ranges (klo/khi) for buckets
-        that lack them — the adoption path for tables bootstrapped from
-        files the sink didn't write, where only parquet FOOTER stats
-        exist (truncation-unsound for strings, so such buckets never
+        that lack them — buckets the heal path re-listed from disk, or
+        written before exact stats existed, carry only parquet FOOTER
+        stats (truncation-unsound for strings, so such buckets never
         qualify for the append fast path until backfilled). One pruned
         read of only the missing buckets + one (num_buckets)-row
         aggregate, committed as a stats record through the optimistic
@@ -2521,9 +2300,9 @@ class UpsertParquetSink:
           mid-migration instead of hashing keys to the wrong buckets;
         - the rewrite itself is one partitionBy(bucket) shuffle of the
           table — O(table), the unavoidable cost of resharding — with
-          files staged additively and old files deleted only after the
-          commit wins (crash windows leave retention-aged orphans for
-          vacuum, never a half-migrated table).
+          files staged additively and old files left for vacuum (crash
+          windows leave retention-aged orphans, never a half-migrated
+          table).
 
         Post-migration the instance continues under the new count.
         At 100 TB this is the maintenance op that keeps the manifest's
@@ -2568,7 +2347,6 @@ class UpsertParquetSink:
                         "op": "rebucket",
                         "batch_id": None,
                         "buckets": {},
-                        "replaced": {},
                         **extra,
                     }
                     touched = {str(i) for i in affected}

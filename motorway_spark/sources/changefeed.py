@@ -52,40 +52,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from motorway_spark.sinks.upsert import UpsertParquetSink
+
 CDC_TYPE_COL = "_change_type"
 CDC_SEQ_COL = "_commit_seq"
 
 
-def _meta_sink(table_dir: str):
-    """A metadata-only sink handle (no SparkSession): the changefeed's
-    driver side needs only the log-replay methods, which are pure file
-    I/O. Returns (sink, manifest)."""
-    from motorway_spark.sinks.upsert import UpsertParquetSink
-
-    sink = UpsertParquetSink(None, table_dir, key_cols=[], num_buckets=None)
-    m = sink._load_manifest()
-    if m is None:
-        raise ValueError(
-            f"{table_dir} has no manifest — not an UpsertParquetSink "
-            "table (write to it once before opening a changefeed)"
-        )
-    sink.key_cols = list(m.get("key_cols") or [])
-    return sink, m
-
-
-def _data_schema_json(m: dict) -> str:
+def _data_schema(sink) -> StructType:
     """The table's data schema (manifest-recorded, ``bucket`` partition
-    column excluded) as a JSON string — what partitions carry to the
-    executors."""
-    if not m.get("schema"):
+    column excluded); partitions carry it to the executors as JSON."""
+    schema = sink.table_schema()
+    if not schema.fields:
         raise ValueError(
-            "changefeed needs a manifest-recorded schema; this table "
-            "predates schema recording — write to it once to adopt"
+            "changefeed needs a manifest-recorded schema; no write to "
+            "this table has recorded one yet"
         )
-    full = StructType.fromJson(json.loads(m["schema"]))
-    return StructType(
-        [f for f in full.fields if f.name != "bucket"]
-    ).json()
+    return schema
 
 
 class _ChangePartition(InputPartition):
@@ -110,24 +92,24 @@ class ManifestChangefeedReader(DataSourceStreamReader):
     def __init__(self, options):
         self.table_dir = options["path"].rstrip("/")
         self.since = int(options.get("sinceSeq", -1))
-        sink, m = _meta_sink(self.table_dir)
+        sink = UpsertParquetSink.open(None, self.table_dir)
         self.key_cols = list(sink.key_cols)
         # pinned at stream start — evolution after this needs a restart
-        self.schema_json = _data_schema_json(m)
+        self.schema_json = _data_schema(sink).json()
 
     def initialOffset(self) -> dict:
         return {"seq": self.since}
 
     def latestOffset(self) -> dict:
-        sink, _m = _meta_sink(self.table_dir)
-        # _load_manifest (inside _meta_sink) set the current head seq
+        # open() loads the manifest, which sets the current head seq
+        sink = UpsertParquetSink.open(None, self.table_dir)
         return {"seq": max(sink._head_seq, self.since)}
 
     def partitions(self, start: dict, end: dict):
         s, e = int(start["seq"]), int(end["seq"])
         if e <= s:
             return [_ChangePartition(-1, "none", [], [], [], "")]
-        sink, _m = _meta_sink(self.table_dir)
+        sink = UpsertParquetSink.open(None, self.table_dir)
         items, _schema = sink.changes_plan(s, e)
         parts = [
             _ChangePartition(
@@ -271,8 +253,8 @@ class ManifestChangefeedSource(DataSource):
         return "manifest_changefeed"
 
     def schema(self) -> StructType:
-        _sink, m = _meta_sink(self.options["path"].rstrip("/"))
-        data = StructType.fromJson(json.loads(_data_schema_json(m)))
+        sink = UpsertParquetSink.open(None, self.options["path"].rstrip("/"))
+        data = _data_schema(sink)
         return StructType(
             list(data.fields)
             + [

@@ -5,7 +5,7 @@ disjointness proof extends to STRING keys (doc-id-keyed corpora, THE
 flagship ingest shape). Replays the numeric fastpath suite on a
 string-keyed registry: append taken for disjoint ranges, merge fallback
 proven for overlaps, exact stats surviving merges / deletes / rebucket,
-and recompute_key_stats() backfilling adopted tables."""
+and recompute_key_stats() backfilling buckets the heal path re-listed."""
 
 from __future__ import annotations
 
@@ -178,20 +178,21 @@ def test_rebucket_recomputes_exact_ranges(spark, tmp_path):
 
 
 def test_recompute_key_stats_backfills_adopted_table(spark, tmp_path):
-    """A table bootstrapped from files the sink didn't write has only
-    footer stats (string-unsound) -> merge path; recompute_key_stats()
+    """Buckets the heal path re-listed from disk carry only footer
+    stats (string-unsound) -> merge path; recompute_key_stats()
     backfills exact ranges and unlocks the append path."""
-    table = str(tmp_path / "adopt")
-    w = UpsertParquetSink(spark, table, key_cols=["doc_id"], num_buckets=4)
-    w.upsert_batch(_df(spark, 0, 40, "v"), batch_id=0)
-    # simulate adoption: drop the manifest log, keep the data files
-    import shutil
-
-    shutil.rmtree(f"{table}/_mlog")
+    table = str(tmp_path / "healed")
     sink = UpsertParquetSink(spark, table, key_cols=["doc_id"], num_buckets=4)
+    sink.upsert_batch(_df(spark, 0, 40, "v"), batch_id=0)
+    # external mutation: every bucket's listed files vanish under new
+    # names, so the next read heals each bucket from a fresh listing
+    for k in sink._load_manifest()["buckets"]:
+        live = f"{table}/data/bucket={k}"
+        for i, f in enumerate(sorted(os.listdir(live))):
+            if f.endswith(".parquet"):
+                os.rename(f"{live}/{f}", f"{live}/part-renamed-{i}.parquet")
+    assert sink.row_count() == 40  # heals every bucket
     m = sink._load_manifest()
-    if m is None:
-        m = sink._bootstrap_manifest()
     assert all("klo" not in e for e in m["buckets"].values())
     # without exact stats a disjoint string batch takes the merge path
     sink.upsert_batch(_df(spark, 100, 105, "m"), batch_id=1)

@@ -168,31 +168,6 @@ def test_out_of_vacuum_retention_raises(spark, tmp_path):
         sink.read_changes(since_seq=head)
 
 
-def test_bootstrap_adoption_emits_initial_inserts(spark, tmp_path):
-    import shutil
-
-    sink = _mk(spark, tmp_path, name="adopt")
-    table = sink.table_dir
-    # strip ALL manifest state: the data dir is now a bare adopted table
-    shutil.rmtree(f"{table}/_mlog")
-    for legacy in ("_upsert_meta.json", "_manifest.json", "_manifest.log"):
-        p = f"{table}/{legacy}"
-        if os.path.exists(p):
-            os.remove(p)
-    sink2 = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=4)
-    sink2.upsert_batch(
-        spark.createDataFrame([Row(k=99, v="new")], "k bigint, v string"),
-        batch_id=0,
-    )
-    got = _rows(sink2.read_changes())
-    # adopted pre-existing rows surface as inserts at the adoption seq
-    boot = [r for r in got if r[0] != 99]
-    assert {(r[0], r[1], r[2]) for r in boot} == {
-        (i, f"v{i}", "insert") for i in range(6)
-    }
-    assert (99, "new", "insert", max(r[-1] for r in got)) in got
-
-
 def test_stream_matches_batch(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.upsert_batch(

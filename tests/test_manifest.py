@@ -1,8 +1,8 @@
 """Manifest metadata for UpsertParquetSink — the lakehouse rung: file
 lists + footer stats per bucket so the driver never LISTS directories
 (Delta-log add-file stats, rebuilt on plain parquet). Covers creation,
-no-scan accessors, crash-window healing, pre-manifest upgrade, and
-stats-based bucket skipping."""
+no-scan accessors, crash-window healing, refusal of a table whose log
+was lost over live data, and stats-based bucket skipping."""
 
 from __future__ import annotations
 
@@ -119,24 +119,37 @@ def test_crash_window_vanished_bucket_heals(spark, tmp_path):
     assert str(k) not in _manifest(sink)["buckets"]
 
 
-def test_pre_manifest_table_upgrades_with_full_bootstrap(spark, tmp_path):
-    """Deleting the manifest (or a table written before manifests
-    existed) must not lose untouched buckets: the first write after the
-    upgrade bootstraps entries for EVERY live bucket."""
+def test_missing_manifest_over_live_data_refuses(spark, tmp_path):
+    """Bucket dirs under data/ with no _mlog/ log are NOT an empty
+    table: writes, reads and vacuum all refuse, and every data file
+    stays in place (reading it as empty would let a write shadow the
+    data and vacuum() reclaim it)."""
     sink, table = _mk(spark, tmp_path)
+
+    def data_files():
+        return sorted(
+            os.path.join(r, f)
+            for r, _, fs in os.walk(f"{table}/data")
+            for f in fs
+        )
+
+    before = data_files()
     shutil.rmtree(f"{table}/_mlog")
-    # legacy read path still works
-    assert sink.read().count() == 40
-    # one small merge recreates the manifest covering the whole table
-    sink.upsert_batch(
-        spark.createDataFrame(
-            [Row(k=1, ts=999, v="up")], "k bigint, ts bigint, v string"
-        ),
-        batch_id=7,
+    fresh = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
+    batch = spark.createDataFrame(
+        [Row(k=1, ts=999, v="up")], "k bigint, ts bigint, v string"
     )
-    assert sink.row_count() == 40
-    m = _manifest(sink)
-    assert sum(e["rows"] for e in m["buckets"].values()) == 40
+    for s in (sink, fresh):
+        with pytest.raises(ValueError, match="no manifest log"):
+            s.upsert_batch(batch, batch_id=7)
+        with pytest.raises(ValueError, match="no manifest log"):
+            s.read()
+        with pytest.raises(ValueError, match="no manifest log"):
+            s.row_count()
+        with pytest.raises(ValueError, match="no manifest log"):
+            s.vacuum(retention_sec=0)
+    assert data_files() == before
+    assert not os.path.exists(f"{table}/_mlog")
 
 
 def test_delete_keys_uses_manifest_schema(spark, tmp_path):
@@ -239,52 +252,6 @@ def test_manifest_commits_are_numbered_log_deltas(spark, tmp_path):
     assert sum(e["rows"] for e in m["buckets"].values()) == 40
     assert {r["ts"] for r in sink.read().filter("k = 0").collect()} == {3}
     assert sink.row_count() == 40
-
-
-def test_legacy_jsonl_manifest_replays_and_migrates(spark, tmp_path):
-    """Tables written by the pre-rewrite sink (`_manifest.json` base +
-    `_manifest.log` JSONL) still load: the legacy log is replayed
-    READ-ONLY — a torn tail line left by an old crash is skipped, and
-    since nothing ever appends to the file again, the historical
-    fused-line hazard (a new record gluing onto a torn tail and taking
-    every later record with it) is structurally gone. The next write
-    commits to the numbered log, and compaction absorbs and removes
-    the legacy files."""
-    sink, table = _mk(spark, tmp_path)
-    # transcribe the current state into the LEGACY on-disk format
-    m = _manifest(sink)
-    shutil.rmtree(f"{table}/_mlog")
-    k_up = next(iter(m["buckets"]))
-    ent = dict(m["buckets"][k_up])
-    base = {
-        "version": 1,
-        "num_buckets": 8,
-        "schema": m["schema"],
-        "buckets": {k: e for k, e in m["buckets"].items() if k != k_up},
-    }
-    with open(f"{table}/_manifest.json", "w") as fh:
-        json.dump(base, fh)
-    with open(f"{table}/_manifest.log", "w") as fh:
-        fh.write(json.dumps({"buckets": {k_up: ent}}) + "\n")
-        fh.write('{"buckets": {"3": {"files": ["TORN')  # old crash tail
-    # cold load: base + complete log records, torn tail ignored
-    m2 = _manifest(sink)
-    assert sum(e["rows"] for e in m2["buckets"].values()) == 40
-    assert {r["k"] for r in sink.read().collect()} == set(range(40))
-    # next write goes to the numbered log; a forced compaction absorbs
-    # and removes the legacy files without losing the log's record
-    fresh = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
-    fresh._LOG_COMPACT_EVERY = 1
-    fresh.upsert_batch(
-        spark.createDataFrame(
-            [Row(k=0, ts=999, v="mig")], "k bigint, ts bigint, v string"
-        ),
-        batch_id=50,
-    )
-    assert not os.path.exists(f"{table}/_manifest.log")
-    assert not os.path.exists(f"{table}/_manifest.json")
-    assert fresh.row_count() == 40
-    assert {r["k"] for r in fresh.read().collect()} == set(range(40))
 
 
 def test_manifest_log_compacts_into_checkpoint(spark, tmp_path):

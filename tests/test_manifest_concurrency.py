@@ -13,8 +13,7 @@ The loser's documented retry path (sinks/upsert.py module docstring):
      next seq with the same record, NO Spark work repeated.
 
 Also covers the round-8 advice items: orphan invisibility + vacuum,
-`bucket=K.old` leftovers not breaking the bootstrap, and a
-num_buckets mismatch over an existing table refusing loudly."""
+and a num_buckets mismatch over an existing table refusing loudly."""
 
 from __future__ import annotations
 
@@ -258,23 +257,6 @@ def test_crashed_writer_orphans_invisible_and_vacuumed(spark, tmp_path):
     # listed files untouched
     assert all(os.path.isfile(f"{live}/{f}") for f in ent["files"])
     assert sink.row_count() == 40
-
-
-def test_bootstrap_tolerates_legacy_old_dirs(spark, tmp_path):
-    """Round-8 advice: a leftover `bucket=K.old` dir (pre-rewrite crash
-    window) must not break the bootstrap's bucket-id parse — only exact
-    `bucket=<int>` names are buckets — and vacuum removes the junk."""
-    table = _mk_table(spark, tmp_path)
-    junk = f"{table}/data/bucket=3.old"
-    os.makedirs(junk, exist_ok=True)
-    with open(f"{junk}/leftover.parquet", "w") as fh:
-        fh.write("junk")
-    shutil.rmtree(f"{table}/_mlog")  # force a re-bootstrap
-    sink = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=8)
-    sink.upsert_batch(_row_df(spark, 1, 999, "up"), batch_id=5)  # no raise
-    assert sink.row_count() == 40
-    sink.vacuum(retention_sec=0)
-    assert not os.path.exists(junk)
 
 
 def test_num_buckets_mismatch_refuses_loudly(spark, tmp_path):

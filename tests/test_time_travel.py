@@ -2,9 +2,7 @@
 vacuum (unlisted = invisible to current readers), so read_version(seq)
 re-resolves any historical manifest within the retention windows —
 the Delta VACUUM-bounds-time-travel contract. history() is the audit
-surface. Out-of-retention versions raise clearly; eager-cleanup mode
-(RETAIN_REPLACED_FILES=False) restores the old footprint and is
-correct, just travel-free."""
+surface. Out-of-retention versions raise clearly."""
 
 from __future__ import annotations
 
@@ -71,28 +69,6 @@ def test_nonexistent_and_vacuumed_versions_raise(spark, tmp_path):
         sink.read_version(1).collect()
     # the current version still reads fine
     assert sink.row_count() == 10
-
-
-def test_eager_cleanup_mode_has_no_travel_but_stays_correct(
-    spark, tmp_path
-):
-    table = str(tmp_path / "eager")
-    sink = UpsertParquetSink(spark, table, key_cols=["k"], num_buckets=4)
-    sink.RETAIN_REPLACED_FILES = False
-    sink.upsert_batch(
-        spark.createDataFrame(
-            [Row(k=i, v=f"a{i}") for i in range(10)], "k bigint, v string"
-        ),
-        batch_id=0,
-    )
-    sink.upsert_batch(
-        spark.createDataFrame([Row(k=2, v="upd")], "k bigint, v string"),
-        batch_id=1,
-    )
-    got = {r["k"]: r["v"] for r in sink.read().collect()}
-    assert got[2] == "upd" and len(got) == 10
-    with pytest.raises(ValueError, match="vacuumed"):
-        sink.read_version(1).collect()
 
 
 def test_time_travel_across_schema_evolution(spark, tmp_path):
