@@ -495,16 +495,13 @@ def sim_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL doubles; argmin ties break on cell index in both (numpy
     argmin takes the first minimum; the oracle orders by (d, cell)).
 
-    Scale shape: assignment is one mapInPandas pass (codebook rides the
-    closure — 8 vectors, like sim_knn_matmul's query set); the probe
-    join is cell-equality — a plain int-key shuffle join; rerank only
-    on probed cells' members. Cells are the partition-pruning story for
-    vectors: written cell-partitioned, a probe reads n_probe/n_cells of
-    the corpus.
+    Scale shape: assignment is one mapInPandas pass of the
+    nearest-codeword kernel (codebook rides the closure — 8 vectors,
+    like sim_knn_matmul's query set); the probe join is cell-equality —
+    a plain int-key shuffle join; rerank only on probed cells' members.
+    Cells are the partition-pruning story for vectors: written
+    cell-partitioned, a probe reads n_probe/n_cells of the corpus.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = _valid_vectors(Catalog(spark, sf_dir).embeddings)
     # one bounded collect serves both the codebook (8 vectors) and the
     # query set (20) — two separate collects would each pay a Spark job
@@ -512,50 +509,31 @@ def sim_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") < N_QUERIES)
         | ((F.col("vec_id") >= IVF_CENTROID_LO) & (F.col("vec_id") <= IVF_CENTROID_HI))
     ).select("vec_id", "embedding").collect()
-    cent_rows = sorted(
-        (r for r in small if r["vec_id"] >= IVF_CENTROID_LO), key=lambda r: r["vec_id"]
+    cents = _matrix(
+        sorted(
+            (r for r in small if r["vec_id"] >= IVF_CENTROID_LO),
+            key=lambda r: r["vec_id"],
+        )
     )
-    cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-
-    def _cell_dists(vecs: np.ndarray) -> np.ndarray:
-        """Per-dim left-fold accumulated squared L2 to every centroid."""
-        acc = np.zeros((vecs.shape[0], cents.shape[0]))
-        for i in range(vecs.shape[1]):
-            d = vecs[:, i : i + 1] - cents[None, :, i]
-            acc += d * d
-        return acc
-
-    def assign(batches):
-        for pdf in batches:
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cell = _cell_dists(vecs).argmin(axis=1)  # first-min = lowest cell
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": cell.astype(np.int32),
-                }
-            )
 
     # r13: corpus-size-derived fan-out for the Python pass (guide §2)
     par = scale_partitions(spark, sf_dir, "embeddings")
     assigned = (
         emb.repartition(par)
         .select("vec_id", "embedding")
-        .mapInPandas(assign, schema="vec_id long, embedding array<float>, cell int")
+        .mapInPandas(*_nn_kernel("assign", (list(range(len(cents))), cents)))
     )
 
     # probe list: 20 query vectors x 8 cells — computed on the driver
-    # with the SAME accumulation, bounded like sim_knn_matmul's collect
+    # with the SAME distance function, bounded like sim_knn_matmul's
+    # collect
     q_rows = sorted(
         (r for r in small if r["vec_id"] < N_QUERIES), key=lambda r: r["vec_id"]
     )
-    q_vecs = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_dists = _cell_dists(q_vecs)
     probe_rows = [
         (int(r["vec_id"]), list(r["embedding"]), int(c))
-        for r, drow in zip(q_rows, q_dists)
-        for c in np.argsort(drow, kind="stable")[:IVF_PROBE]
+        for r, cs in zip(q_rows, _probe_positions(_matrix(q_rows), cents, IVF_PROBE))
+        for c in cs
     ]
     probe = spark.createDataFrame(
         probe_rows, "query_id long, q_emb array<float>, cell int"
@@ -839,35 +817,20 @@ def semdedup_flags(
     within-cell cosine flags for ``vectors``. Shared by the registered
     query and pipeline_corpus_curation; see dedup_semantic_semdedup for
     semantics, determinism, and scale notes."""
-    import numpy as np
     import pandas as pd
 
-    cent_rows = sorted(
-        _valid_vectors(codebook_src)
-        .filter(
-            (F.col("vec_id") >= IVF_CENTROID_LO)
-            & (F.col("vec_id") <= IVF_CENTROID_HI)
-        )
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-
-    def assign(batches):
-        for pdf in batches:
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            acc = np.zeros((vecs.shape[0], cents.shape[0]))
-            for i in range(vecs.shape[1]):
-                d = vecs[:, i : i + 1] - cents[None, :, i]
-                acc += d * d  # per-dim left fold == oracle's range() fold
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": acc.argmin(axis=1).astype(np.int32),
-                }
+    cents = _matrix(
+        sorted(
+            _valid_vectors(codebook_src)
+            .filter(
+                (F.col("vec_id") >= IVF_CENTROID_LO)
+                & (F.col("vec_id") <= IVF_CENTROID_HI)
             )
+            .select("vec_id", "embedding")
+            .collect(),
+            key=lambda r: r["vec_id"],
+        )
+    )
 
     # r13: input-size-derived fan-out for the Python pass (guide §2;
     # frame variant — this helper takes any (vec_id, embedding) frame)
@@ -876,7 +839,7 @@ def semdedup_flags(
         _valid_vectors(vectors)
         .repartition(par)
         .select("vec_id", "embedding")
-        .mapInPandas(assign, schema="vec_id long, embedding array<float>, cell int")
+        .mapInPandas(*_nn_kernel("assign", (list(range(len(cents))), cents)))
     )
     # assigned feeds three consumers (anchor collect, kernel input,
     # final rollcall) — eager-persist so the assignment map runs once.
@@ -915,13 +878,7 @@ def semdedup_flags(
         mat = np.array([r["embedding"] for r in rows_c], dtype=np.float64)
         by_cell[c] = (ids, mat)
 
-    def _fold_norms(m: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):
-            acc += m[:, i] * m[:, i]
-        return np.sqrt(acc)
-
-    anchor_norms = {c: _fold_norms(mat) for c, (ids, mat) in by_cell.items()}
+    anchor_norms = {c: _leftfold_norms(mat) for c, (ids, mat) in by_cell.items()}
 
     def find_dups(batches):
         for pdf in batches:
@@ -934,7 +891,7 @@ def semdedup_flags(
                 vids = sub["vec_id"].to_numpy()
                 a_ids, a_mat = by_cell[c]
                 dots = _fold_dots(vecs, a_mat)
-                norms = _fold_norms(vecs)
+                norms = _leftfold_norms(vecs)
                 # zero-norm vectors have no cosine: 0/0 -> NaN, and
                 # isfinite excludes them -> semantic dedup abstains
                 # (mirrored by the oracle's norm > 0 guards)
@@ -1262,36 +1219,36 @@ def _kmeans_oracle() -> str:
     """
 
 
-def _km_assign_factory(cents: "np.ndarray", cells: list[int]):
-    """mapInPandas factory: nearest-cell assignment against a fixed
-    centroid matrix, per-dim left-fold distances (bit-matches the
-    oracle's explicit `+` chain), first-min tiebreak = lowest cell.
-    Output schema: vec_id, embedding, cell, d (min squared L2)."""
-    import pandas as pd
+# ---------------------------------------------------------------------------
+# The nearest-codeword kernel: every assignment, encode and training pass
+# of the IVF, k-means and PQ operators is one configuration of
+# _nn_kernel, and every squared distance they compute, on executors or
+# on the driver, comes from _sq_dists.
+# ---------------------------------------------------------------------------
+def _make_leftfold_norms():
+    """Build _leftfold_norms as a NESTED-ORIGIN function: its qualname
+    contains '<locals>', so cloudpickle serializes any mapInPandas
+    closure referencing it BY VALUE instead of by module reference —
+    executors need numpy but NOT an importable motorway_spark (the
+    bare local-cluster deployment rung tests/test_local_cluster.py
+    pins; a by-reference pickle would crash-loop PYTHONPATH-less
+    executors on ModuleNotFoundError)."""
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            acc = np.zeros((vecs.shape[0], cents.shape[0]))
-            for i in range(vecs.shape[1]):
-                d = vecs[:, i : i + 1] - cents[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": [cells[p] for p in pos],
-                    "d": acc[np.arange(len(pos)), pos],
-                }
-            )
+    def _leftfold_norms(vecs: "np.ndarray") -> "np.ndarray":
+        """Row norms accumulated dim-by-dim — the same left-fold order
+        as the SQL `+` chains and DuckDB's list_sum, so the normalized
+        components divide by bit-identical norms in both engines
+        (numpy's own .sum() is pairwise and can differ in the last
+        ulp)."""
+        acc = np.zeros(vecs.shape[0])
+        for i in range(vecs.shape[1]):
+            acc += vecs[:, i] * vecs[:, i]
+        return np.sqrt(acc)
 
-    return fn
+    return _leftfold_norms
 
 
-_KM_ASSIGN_SCHEMA = "vec_id long, embedding array<float>, cell int, d double"
+_leftfold_norms = _make_leftfold_norms()
 
 
 def _make_micro_halfup():
@@ -1347,88 +1304,219 @@ def _micro_mean(u: int, n: int) -> float:
     return float(math.floor(float(2 * u + n) / float(2 * n))) / 1000000.0
 
 
-# Fused assignment + training-sums pass (r13, guide §1.2/§4.1): the
-# Lloyd update's decimal mean is a half-up micro-grid quantization per
-# element followed by an EXACT integer sum — so the mapInPandas
-# assignment pass can emit per-cell int64 partial sums (<= IVF_CELLS
-# rows x DIM+3 longs per task) instead of shipping the whole corpus
-# (vec_id, 64-float embedding, cell, d) back through Arrow into a
-# 64-expression DECIMAL(38,6) hash aggregate. The JVM side reduces to
-# a trivial bigint sum; the driver finishes with _micro_mean. Payload
-# per pass: O(cells * tasks), not O(corpus).
-_KM_STATS_SCHEMA = "cell int, n long, dmicro long, " + ", ".join(
-    f"s{i} long" for i in range(1, DIM + 1)
-)
+def _make_nearest():
+    """Build the distance function and the kernel nested-origin, for
+    the reason _make_leftfold_norms gives: the mapInPandas functions
+    the kernel returns then pickle BY VALUE, so executors need numpy
+    and pandas but never an importable motorway_spark."""
+
+    def _sq_dists(x: "np.ndarray", cb: "np.ndarray") -> "np.ndarray":
+        """n x k squared L2 from every row of ``x`` to every codeword
+        (row of ``cb``), folded one dimension at a time in ascending
+        order — the oracles' explicit left-to-right `+` chains, bit for
+        bit. Elementwise numpy ops give the same doubles whatever the
+        array shape, so a driver-side call over the 20 query rows
+        matches the executor pass over a whole batch."""
+        acc = np.zeros((x.shape[0], cb.shape[0]))
+        for i in range(x.shape[1]):
+            d = x[:, i : i + 1] - cb[None, :, i]
+            acc += d * d
+        return acc
+
+    def _nn_kernel(
+        mode: str,
+        coarse=None,
+        subs=None,
+        normalize: bool = False,
+        raw_coarse: bool = False,
+        residual: bool = False,
+    ):
+        """(mapInPandas function, output schema) for one configuration
+        of the pipeline every assignment, encode and training pass runs:
+
+        1. the batch's embeddings as a float64 matrix;
+        2. ``normalize``: unit-normalise each row (_leftfold_norms);
+        3. ``coarse=(labels, cents)``: the nearest cell — of the raw
+           row when ``raw_coarse`` (sim_ann_ivfpq's inverted file);
+        4. ``residual``: subtract the assigned cell's centroid;
+        5. ``subs``: one (labels, k x {PQ_SUBDIM}) sub-codebook per
+           subspace — the nearest code of each subvector.
+
+        argmin takes the first minimum, so labels listed ascending give
+        the oracles' ORDER BY d, label tiebreak. ``mode`` picks the
+        output:
+
+        - ``assign``: vec_id, embedding, cell;
+        - ``codes``: vec_id, cell (with ``coarse`` only), c0..c{PQ_M-1};
+        - ``stats``: per task, one row per live (s, label) of the last
+          stage (the subspaces, else the cells with s = 0): member
+          count n, dmicro = sum of FLOOR(d*1e6+0.5), and x1..xW, the
+          exact int64 micro sums (_micro_halfup) of the members'
+          components in that stage's space. The Lloyd update is then a
+          bigint sum plus _micro_mean, bit-equal to _km_mean_sql's
+          decimal aggregate (tools/verify_micro_halfup.py) — O(labels
+          x tasks) rows cross Arrow instead of the corpus."""
+        import pandas as pd
+
+        if coarse is not None:
+            coarse = (np.asarray(coarse[0], dtype=np.int32), coarse[1])
+        if subs is not None:
+            subs = [(np.asarray(lab, dtype=np.int32), cb) for lab, cb in subs]
+        # the stage whose labels the stats count, and its vector width
+        last, w = (subs, PQ_SUBDIM) if subs is not None else ([coarse], DIM)
+
+        def fn(batches):
+            n_acc = [np.zeros(len(lab), dtype=np.int64) for lab, _ in last]
+            d_acc = [np.zeros(len(lab), dtype=np.int64) for lab, _ in last]
+            x_acc = [np.zeros((len(lab), w), dtype=np.int64) for lab, _ in last]
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                raw = np.array(list(pdf["embedding"]), dtype=np.float64)
+                x = raw / _leftfold_norms(raw)[:, None] if normalize else raw
+                out = {"vec_id": pdf["vec_id"]}
+                if mode == "assign":
+                    out["embedding"] = pdf["embedding"]
+                if coarse is not None:
+                    labels, cents = coarse
+                    dist = _sq_dists(raw if raw_coarse else x, cents)
+                    pos = dist.argmin(axis=1)
+                    out["cell"] = labels[pos]
+                    hits = [(pos, dist)]
+                    if residual:
+                        x = x - cents[pos]
+                if subs is not None:
+                    hits = []
+                    for s, (labels, cb) in enumerate(subs):
+                        dist = _sq_dists(x[:, s * w : (s + 1) * w], cb)
+                        pos = dist.argmin(axis=1)
+                        out[f"c{s}"] = labels[pos]
+                        hits.append((pos, dist))
+                if mode != "stats":
+                    yield pd.DataFrame(out)
+                    continue
+                micro = _micro_halfup(x)
+                rows = np.arange(len(x))
+                for s, (pos, dist) in enumerate(hits):
+                    dmic = np.floor(dist[rows, pos] * 1000000.0 + 0.5)
+                    np.add.at(n_acc[s], pos, 1)
+                    np.add.at(d_acc[s], pos, dmic.astype(np.int64))
+                    np.add.at(x_acc[s], pos, micro[:, s * w : (s + 1) * w])
+            if mode == "stats":
+                live = [np.nonzero(n)[0] for n in n_acc]
+                out = {
+                    "s": np.concatenate(
+                        [np.full(len(p), s, dtype=np.int32) for s, p in enumerate(live)]
+                    ),
+                    "label": np.concatenate(
+                        [lab[p] for (lab, _), p in zip(last, live)]
+                    ),
+                    "n": np.concatenate([a[p] for a, p in zip(n_acc, live)]),
+                    "dmicro": np.concatenate([a[p] for a, p in zip(d_acc, live)]),
+                }
+                xs = np.concatenate([a[p] for a, p in zip(x_acc, live)])
+                for j in range(w):
+                    out[f"x{j + 1}"] = xs[:, j]
+                yield pd.DataFrame(out)
+
+        if mode == "assign":
+            cols = ["vec_id long", "embedding array<float>", "cell int"]
+        elif mode == "codes":
+            cols = ["vec_id long"] + (["cell int"] if coarse is not None else [])
+            cols += [f"c{s} int" for s in range(len(subs))]
+        else:
+            cols = ["s int", "label int", "n long", "dmicro long"]
+            cols += [f"x{j} long" for j in range(1, w + 1)]
+        return fn, ", ".join(cols)
+
+    return _sq_dists, _nn_kernel
 
 
-def _km_assign_stats_factory(
-    cents: "np.ndarray", cells: list[int], normalize: bool = False
-):
-    """mapInPandas factory: nearest-cell assignment (identical
-    left-fold distances and first-min tiebreak as _km_assign_factory /
-    _resn_assign_factory) fused with the per-cell training statistics:
-    member count ``n``, inertia ``dmicro`` (sum of FLOOR(d*1e6+0.5)),
-    and ``s1..s{DIM}`` — exact int64 micro sums of the assigned
-    vectors' components (normalized components when ``normalize``,
-    matching the residual loop's ``element/nrm`` grid)."""
-    import pandas as pd
-
-    def fn(batches):
-        k = len(cells)
-        n_acc = np.zeros(k, dtype=np.int64)
-        d_acc = np.zeros(k, dtype=np.int64)
-        s_acc = np.zeros((k, DIM), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            base = (
-                vecs / _leftfold_norms(vecs)[:, None] if normalize else vecs
-            )
-            acc = np.zeros((base.shape[0], cents.shape[0]))
-            for i in range(base.shape[1]):
-                d = base[:, i : i + 1] - cents[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            dmin = acc[np.arange(len(pos)), pos]
-            dmic = np.floor(dmin * 1000000.0 + 0.5).astype(np.int64)
-            micro = _micro_halfup(base)
-            np.add.at(n_acc, pos, 1)
-            np.add.at(d_acc, pos, dmic)
-            np.add.at(s_acc, pos, micro)
-        live = np.nonzero(n_acc)[0]
-        out = {
-            "cell": np.array([cells[int(p)] for p in live], dtype="int32"),
-            "n": n_acc[live],
-            "dmicro": d_acc[live],
-        }
-        for i in range(DIM):
-            out[f"s{i + 1}"] = s_acc[live, i]
-        yield pd.DataFrame(out)
-
-    return fn
+_sq_dists, _nn_kernel = _make_nearest()
 
 
-def _km_stats_rows(stats: DataFrame):
-    """Reduce a stats-factory output to the per-cell codebook: returns
-    (rows sorted by cell, cells, cents ndarray) where each row carries
-    the exact total n / dmicro / micro sums and cents applies
-    _micro_mean per component."""
-    aggs = [F.sum("n").alias("n"), F.sum("dmicro").alias("dmicro")] + [
-        F.sum(f"s{i}").alias(f"s{i}") for i in range(1, DIM + 1)
+def _matrix(rows) -> "np.ndarray":
+    """Collected rows' embeddings as a float64 n x {DIM} matrix."""
+    return np.array([r["embedding"] for r in rows], dtype=np.float64).reshape(-1, DIM)
+
+
+def _query_vectors(corpus: DataFrame):
+    """(vec_ids, float64 matrix) of the {N_QUERIES} query vectors in
+    ``corpus`` — one bounded collect."""
+    rows = (
+        corpus.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return [int(r["vec_id"]) for r in rows], _matrix(rows)
+
+
+def _probe_positions(vecs: "np.ndarray", cents: "np.ndarray", n: int) -> "np.ndarray":
+    """Per row of ``vecs``, the positions of its ``n`` nearest
+    centroids: a stable sort on d, which for ascending labels is the
+    oracles' ORDER BY d, cell."""
+    return np.argsort(_sq_dists(vecs, cents), axis=1, kind="stable")[:, :n]
+
+
+def _adc_rows(keys: list[tuple], vecs: "np.ndarray", subs) -> list[tuple]:
+    """ADC distance tables: for each key and its unit-space vector (a
+    normalized query, or a query's residual in one probed cell), per
+    subspace s and code the squared L2 to that sub-codeword on the
+    integer micro grid, as (*key, s, code, dmicro) rows. Bounded:
+    len(keys) x {PQ_M} x {PQ_K}."""
+    rows = []
+    for s, (labels, cb) in enumerate(subs):
+        dist = _sq_dists(vecs[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM], cb)
+        dmic = np.floor(dist * 1000000.0 + 0.5)
+        rows += [
+            (*key, s, int(c), int(m))
+            for key, drow in zip(keys, dmic)
+            for c, m in zip(labels, drow)
+        ]
+    return rows
+
+
+def _stats_codebooks(stats: DataFrame, width: int):
+    """Reduce a stats pass to its codebooks: one (labels ascending,
+    k x ``width`` matrix of _micro_mean centroids) per subspace of
+    that width ({DIM} // width of them), plus the summed (s, label)
+    rows."""
+    aggs = [
+        F.sum(c).alias(c)
+        for c in ["n", "dmicro"] + [f"x{j}" for j in range(1, width + 1)]
     ]
     rows = sorted(
-        stats.groupBy("cell").agg(*aggs).collect(), key=lambda r: r["cell"]
+        stats.groupBy("s", "label").agg(*aggs).collect(),
+        key=lambda r: (r["s"], r["label"]),
     )
-    cells = [r["cell"] for r in rows]
-    cents = np.array(
-        [
-            [_micro_mean(r[f"s{i}"], r["n"]) for i in range(1, DIM + 1)]
-            for r in rows
-        ],
-        dtype=np.float64,
-    ).reshape(-1, DIM)
-    return rows, cells, cents
+    books = []
+    for s in range(DIM // width):
+        rs = [r for r in rows if r["s"] == s]
+        cents = np.array(
+            [
+                [_micro_mean(r[f"x{j}"], r["n"]) for j in range(1, width + 1)]
+                for r in rs
+            ],
+            dtype=np.float64,
+        ).reshape(-1, width)
+        books.append(([r["label"] for r in rs], cents))
+    return books, rows
+
+
+def _lloyd_step(
+    corpus: DataFrame,
+    cells: list[int],
+    cents: "np.ndarray",
+    normalize: bool = False,
+):
+    """One quantized-Lloyd iteration: the fused stats pass against
+    (cells, cents) — of unit-normalised vectors when ``normalize`` —
+    reduced to the next (cells, cents) and the per-cell summed rows."""
+    [(cells, cents)], rows = _stats_codebooks(
+        corpus.mapInPandas(*_nn_kernel("stats", (cells, cents), normalize=normalize)),
+        DIM,
+    )
+    return cells, cents, rows
 
 
 KM_MAX_ITERS = 6      # convergence-looped Lloyd: iteration cap
@@ -1458,10 +1546,11 @@ def _lloyd_fit(
     squared assign distances on the micro grid — the cost the loop
     is descending).
 
-    Scale shape (100 TB): per iteration one mapInPandas assignment
-    pass (codebook in the closure) + one map-side-combinable hash
-    aggregate; the driver sees only the <= {IVF_CELLS}-row codebook
-    per iteration — movement/stop is a control-plane decision over
+    Scale shape (100 TB): per iteration one stats pass of the
+    nearest-codeword kernel (codebook in the closure) + one
+    map-side-combinable bigint hash aggregate over its per-task,
+    per-cell micro sums; the driver sees only the <= {IVF_CELLS}-row
+    codebook per iteration — movement/stop is a control-plane decision over
     bounded data, never a data path.
 
     The corpus persists via the cache registry: Lloyd re-reads it once
@@ -1495,7 +1584,7 @@ def _lloyd_fit(
         .select("embedding")
         .collect()
     )
-    cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
+    cents = _matrix(cent_rows)
     cells = list(range(IVF_CELLS))
 
     trace: list[dict] = []
@@ -1503,10 +1592,7 @@ def _lloyd_fit(
         # r13: fused stats pass — per-cell int64 micro sums replace the
         # full-corpus Arrow return + 64-expression decimal aggregate
         # (bit-equal by construction, see _micro_halfup/_micro_mean)
-        stats = corpus.mapInPandas(
-            _km_assign_stats_factory(cents, cells), schema=_KM_STATS_SCHEMA
-        )
-        rows, new_cells, new_cents = _km_stats_rows(stats)
+        new_cells, new_cents, rows = _lloyd_step(corpus, cells, cents)
         prev = {c: cents[k] for k, c in enumerate(cells)}
         # Degenerate corpus (zero valid vectors) or total cell turnover:
         # no surviving cell to measure movement over. Movement is then
@@ -1573,11 +1659,13 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     member count, centroid checksum (sum of C2 components), and
     inertia (sum of A2 squared distances, exact integer micro-units).
 
-    Scale shape (100 TB): assignment is one mapInPandas pass per
-    iteration with the codebook in the closure (8x64 doubles — the
-    sim_knn_matmul pattern); the update is one {DIM}-column decimal
-    hash aggregate (map-side combinable); the only collects are the
-    8-row codebooks. Iterations are a fixed constant — the plan is
+    Scale shape (100 TB): each iteration is one stats pass of the
+    nearest-codeword kernel with the codebook in the closure (8x64
+    doubles — the sim_knn_matmul pattern), fusing the assignment with
+    per-task, per-cell int64 micro sums; the update is one {DIM}-column
+    bigint hash aggregate over those (map-side combinable); the only
+    collect is the 8-row C1 codebook, and C2's report closes in the
+    returned plan. Iterations are a fixed constant — the plan is
     K x (map + agg), linear in corpus size, no quadratic term.
 
     Reference: motorway has no clustering surface; this extends the
@@ -1586,20 +1674,18 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     corpus, cells1, c1 = _lloyd_c1(spark, sf_dir)
     # r13: the A2 aggregate runs as the fused stats pass (per-cell
-    # int64 micro sums; see _km_assign_stats_factory) and the 8-row
+    # int64 micro sums; see _nn_kernel) and the 8-row
     # report closes IN the returned plan with the identical
     # arithmetic: each mean replays _km_mean_sql's closing ops
     # (FLOOR((2u+n)/(2n))/1e6 over the exact bigint micro sum),
     # checksum keeps the left-to-right IEEE add chain, inertia =
     # CAST(SUM(dmicro) AS DOUBLE)/1e6. One distributed plan, no
     # driver round trip — the noop/bench action drives it directly.
-    stats = corpus.mapInPandas(
-        _km_assign_stats_factory(c1, cells1), schema=_KM_STATS_SCHEMA
-    )
-    agg = stats.groupBy("cell").agg(
+    stats = corpus.mapInPandas(*_nn_kernel("stats", (cells1, c1)))
+    agg = stats.groupBy(F.col("label").alias("cell")).agg(
         F.sum("n").alias("n_members"),
         F.sum("dmicro").alias("__dm"),
-        *[F.sum(f"s{i}").alias(f"u{i}") for i in range(1, DIM + 1)],
+        *[F.sum(f"x{i}").alias(f"u{i}") for i in range(1, DIM + 1)],
     )
     mean_sql = (
         "CAST(FLOOR(CAST(2 * u{i} + n_members AS DOUBLE)"
@@ -1709,8 +1795,8 @@ def cluster_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE picks the same least converged iteration — dynamic control
     flow verified by a static query.
 
-    Scale shape (100 TB): each iteration is one mapInPandas assignment
-    pass + one map-side-combinable hash aggregate ({DIM} decimal sums,
+    Scale shape (100 TB): each iteration is one kernel stats pass +
+    one map-side-combinable hash aggregate ({DIM} bigint micro sums,
     <= {IVF_CELLS} output rows); the driver only ever holds the 8-row
     codebook per iteration — the loop is control flow over bounded
     artifacts, the data path stays distributed. Early exit bounds the
@@ -1808,34 +1894,18 @@ def sim_ann_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     corpus, cells1, c1 = _lloyd_c1(spark, sf_dir)
     # r13: C2 via the fused stats pass (bit-equal micro-sum means)
-    _rows, cells2, c2 = _km_stats_rows(
-        corpus.mapInPandas(
-            _km_assign_stats_factory(c1, cells1), schema=_KM_STATS_SCHEMA
-        )
-    )
+    cells2, c2, _rows = _lloyd_step(corpus, cells1, c1)
 
-    a3 = corpus.mapInPandas(
-        _km_assign_factory(c2, cells2), schema=_KM_ASSIGN_SCHEMA
-    ).select("vec_id", "embedding", "cell")
+    a3 = corpus.mapInPandas(*_nn_kernel("assign", (cells2, c2)))
 
     # per-query probe list on the driver: 20 bounded query vectors x
-    # <= 8 cells, per-dim left-fold distances, (d, cell) tie order
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    probe_pairs = []
-    for r in q_rows:
-        v = np.array(r["embedding"], dtype=np.float64)
-        acc = np.zeros(c2.shape[0])
-        for i in range(DIM):
-            d = v[i] - c2[:, i]
-            acc += d * d
-        order = sorted(range(len(cells2)), key=lambda p: (acc[p], cells2[p]))
-        probe_pairs += [
-            (r["vec_id"], cells2[p]) for p in order[:IVF_PROBE]
-        ]
+    # <= 8 cells, the kernel's distances, (d, cell) tie order
+    q_ids, q_vecs = _query_vectors(corpus)
+    probe_pairs = [
+        (qid, cells2[p])
+        for qid, ps in zip(q_ids, _probe_positions(q_vecs, c2, IVF_PROBE))
+        for p in ps
+    ]
     probe = F.broadcast(
         spark.createDataFrame(probe_pairs, "query_id long, cell int")
     )
@@ -1961,65 +2031,29 @@ def _pq_oracle() -> str:
     """
 
 
-def _make_leftfold_norms():
-    """Build _leftfold_norms as a NESTED-ORIGIN function: its qualname
-    contains '<locals>', so cloudpickle serializes any mapInPandas
-    closure referencing it BY VALUE instead of by module reference —
-    executors need numpy but NOT an importable motorway_spark (the
-    bare local-cluster deployment rung tests/test_local_cluster.py
-    pins; the r13 fused stats factories reference this helper, and a
-    by-reference pickle would crash-loop PYTHONPATH-less executors on
-    ModuleNotFoundError)."""
-
-    def _leftfold_norms(vecs: "np.ndarray") -> "np.ndarray":
-        """Row norms accumulated dim-by-dim — the same left-fold order
-        as the SQL `+` chains and DuckDB's list_sum, so the normalized
-        components divide by bit-identical norms in both engines
-        (numpy's own .sum() is pairwise and can differ in the last
-        ulp)."""
-        acc = np.zeros(vecs.shape[0])
-        for i in range(vecs.shape[1]):
-            acc += vecs[:, i] * vecs[:, i]
-        return np.sqrt(acc)
-
-    return _leftfold_norms
+def _pq_split(cb: "np.ndarray") -> list:
+    """A {PQ_K} x {DIM} codebook as {PQ_M} per-subspace (codes, {PQ_K} x
+    {PQ_SUBDIM}) sub-codebooks, code = row position."""
+    return [
+        (list(range(len(cb))), cb[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM])
+        for s in range(PQ_M)
+    ]
 
 
-_leftfold_norms = _make_leftfold_norms()
-
-
-def _pq_encode_factory(cbn: "np.ndarray", emit_embedding: bool = True):
-    """mapInPandas factory: PQ-encode each vector — L2-normalize (left-
-    fold norm), then per subspace the argmin over {PQ_K} NORMALIZED
-    codebook subvectors with per-dim left-fold distances (bit-matches
-    the oracle's explicit `+` chains), first-min tiebreak = lowest
-    code. One pass computes all {PQ_M} codes.
-
-    ``emit_embedding=False`` drops the 64-float embedding from the
-    OUTPUT batches (guide §4.1: column pruning cannot reach inside an
-    opaque Python function, so a downstream select ships the payload
-    through Arrow first and drops it after) — use with
-    ``_PQ_CODES_NARROW_SCHEMA`` wherever only the codes are consumed."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            out = {"vec_id": pdf["vec_id"]}
-            if emit_embedding:
-                out["embedding"] = pdf["embedding"]
-            for s in range(PQ_M):
-                acc = np.zeros((vecs.shape[0], cbn.shape[0]))
-                for i in range(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM):
-                    d = vn[:, i : i + 1] - cbn[None, :, i]
-                    acc += d * d
-                out[f"c{s}"] = acc.argmin(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    return fn
+def _pq_fixed_subs(spark: SparkSession, sf_dir: str) -> list:
+    """The normalized fixed codebook (vec_ids {PQ_CB_LO}..{PQ_CB_HI})
+    split into sub-codebooks — sim_ann_pq_adc's and the streaming
+    ingest's codebook, and the pass-1 start of every trained PQ."""
+    cb = _matrix(
+        Catalog(spark, sf_dir)
+        .embeddings.filter(
+            (F.col("vec_id") >= PQ_CB_LO) & (F.col("vec_id") <= PQ_CB_HI)
+        )
+        .orderBy("vec_id")
+        .select("embedding")
+        .collect()
+    )
+    return _pq_split(cb / _leftfold_norms(cb)[:, None])
 
 
 @query("sim_ann_pq_adc", oracle=_pq_oracle())
@@ -2060,58 +2094,19 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> PQ (compressed scan), each oracle-checked."""
     emb = _valid_vectors(Catalog(spark, sf_dir).embeddings)
     corpus = emb.select("vec_id", "embedding")
+    subs = _pq_fixed_subs(spark, sf_dir)
 
-    cb_rows = (
-        Catalog(spark, sf_dir)
-        .embeddings.filter(
-            (F.col("vec_id") >= PQ_CB_LO) & (F.col("vec_id") <= PQ_CB_HI)
-        )
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    cb = np.array([r["embedding"] for r in cb_rows], dtype=np.float64)
-    cbn = cb / _leftfold_norms(cb)[:, None]
-
-    # r12 opt: the ADC scan consumes only (vec_id, codes) — don't ship
-    # the 64-float embedding back through Arrow (§4.1)
-    codes = corpus.mapInPandas(
-        _pq_encode_factory(cbn, emit_embedding=False),
-        schema=_PQ_CODES_NARROW_SCHEMA,
-    )
+    # r12 opt: the ADC scan consumes only (vec_id, codes) — the codes
+    # output never ships the 64-float embedding back through Arrow (§4.1)
+    codes = corpus.mapInPandas(*_nn_kernel("codes", subs=subs, normalize=True))
 
     # query ADC tables: 20 bounded query vectors x 8 subspaces x 16
     # codes, micro-int entries — driver-built, broadcast (2,560 rows)
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    q_ids, q = _query_vectors(corpus)
+    tab_rows = _adc_rows(
+        [(i,) for i in q_ids], q / _leftfold_norms(q)[:, None], subs
     )
-    return _pq_adc_rerank(spark, corpus, codes, _pq_fixed_tab_rows(q_rows, cbn))
-
-
-def _pq_fixed_tab_rows(q_rows, cbn: "np.ndarray") -> list[tuple]:
-    """ADC distance tables for the FIXED (normalized) codebook: per
-    (query, subspace, code) the squared L2 between the NORMALIZED query
-    subvector and the codebook subvector, integer micro grid. Bounded:
-    {N_QUERIES} x {PQ_M} x {PQ_K} rows. Shared by sim_ann_pq_adc and
-    the streaming ingest twin."""
-    import math
-
-    tab_rows = []
-    for r in q_rows:
-        v = np.array([r["embedding"]], dtype=np.float64)
-        vq = (v / _leftfold_norms(v)[:, None])[0]
-        for s in range(PQ_M):
-            acc = np.zeros(cbn.shape[0])
-            for i in range(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM):
-                d = vq[i] - cbn[:, i]
-                acc += d * d
-            tab_rows += [
-                (int(r["vec_id"]), s, code, int(math.floor(acc[code] * 1e6 + 0.5)))
-                for code in range(PQ_K)
-            ]
-    return tab_rows
+    return _pq_adc_rerank(spark, corpus, codes, tab_rows)
 
 
 def _pq_adc_rerank(spark, corpus, codes, tab_rows) -> DataFrame:
@@ -2287,245 +2282,19 @@ def _pq_lloyd_oracle() -> str:
     """
 
 
-def _pq_encode_trained_factory(trained: dict, emit_embedding: bool = True):
-    """mapInPandas factory for the TRAINED codebooks: per subspace s,
-    ``trained[s]`` is (codes list, k_s x 8 centroid matrix over that
-    subspace's dims). Same left-fold distances and (d, code) tiebreak
-    as pass 1 (codes are listed ascending, argmin takes the first
-    min). ``emit_embedding=False``: see _pq_encode_factory."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            out = {"vec_id": pdf["vec_id"]}
-            if emit_embedding:
-                out["embedding"] = pdf["embedding"]
-            for s in range(PQ_M):
-                codes_s, cents_s = trained[s]
-                acc = np.zeros((vecs.shape[0], cents_s.shape[0]))
-                for j in range(PQ_SUBDIM):
-                    d = vn[:, s * PQ_SUBDIM + j : s * PQ_SUBDIM + j + 1] - cents_s[None, :, j]
-                    acc += d * d
-                pos = acc.argmin(axis=1)
-                out[f"c{s}"] = np.array([codes_s[p] for p in pos], dtype="int32")
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def _ivfpq_invfile_codes_factory(
-    c2: "np.ndarray", cells2: list[int], trained: dict
-):
-    """mapInPandas factory fusing the IVF inverted-file assignment
-    (raw-space nearest C2 cell — _km_assign_factory's left-fold and
-    first-min tiebreak, bit for bit) with the trained PQ encode
-    (_pq_encode_trained_factory's normalized-space subspace argmin) in
-    ONE pass, emitting only (vec_id, cell, c0..c{PQ_M-1}) — no
-    embedding payload. Replaces two full corpus passes (and the
-    embedding column the encode pass used to ship back through Arrow)
-    with one narrow pass (guide §1.2 fewer passes, §4.1 pass only the
-    columns the consumer needs)."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            # inverted file: raw-space nearest C2 cell
-            acc = np.zeros((vecs.shape[0], c2.shape[0]))
-            for i in range(vecs.shape[1]):
-                d = vecs[:, i : i + 1] - c2[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            out = {
-                "vec_id": pdf["vec_id"],
-                "cell": np.array([cells2[p] for p in pos], dtype="int32"),
-            }
-            # trained PQ codes: normalized-space subspace argmin
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            for s in range(PQ_M):
-                codes_s, cents_s = trained[s]
-                a2 = np.zeros((vecs.shape[0], cents_s.shape[0]))
-                for j in range(PQ_SUBDIM):
-                    d = (
-                        vn[:, s * PQ_SUBDIM + j : s * PQ_SUBDIM + j + 1]
-                        - cents_s[None, :, j]
-                    )
-                    a2 += d * d
-                p2 = a2.argmin(axis=1)
-                out[f"c{s}"] = np.array(
-                    [codes_s[p] for p in p2], dtype="int32"
-                )
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-_IVFPQ_INV_CODES_SCHEMA = "vec_id long, cell int, " + ", ".join(
-    f"c{s} int" for s in range(PQ_M)
-)
-
-
-def _pq_fixed_cbn(spark: SparkSession, sf_dir: str) -> "np.ndarray":
-    """The normalized fixed init codebook (vec_ids {PQ_CB_LO}..{PQ_CB_HI})
-    as a {PQ_K} x {DIM} float64 matrix — the shared pass-1 starting point
-    for every trained-PQ consumer."""
-    cb_rows = (
-        Catalog(spark, sf_dir)
-        .embeddings.filter(
-            (F.col("vec_id") >= PQ_CB_LO) & (F.col("vec_id") <= PQ_CB_HI)
-        )
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    cb = np.array([r["embedding"] for r in cb_rows], dtype=np.float64)
-    return cb / _leftfold_norms(cb)[:, None]
-
-
-_PQ_CODES_SCHEMA = "vec_id long, embedding array<float>, " + ", ".join(
-    f"c{s} int" for s in range(PQ_M)
-)
-# codes-only output for encode passes whose consumers never read the
-# embedding back (ADC scans, the ingest registry): pair with
-# emit_embedding=False on the factories (§4.1)
-_PQ_CODES_NARROW_SCHEMA = "vec_id long, " + ", ".join(
-    f"c{s} int" for s in range(PQ_M)
-)
-
-
-# Fused PQ train pass (r13): per-(s, code) int64 micro partial sums of
-# the NORMALIZED subspace components — the _km_mean_sql grid computed
-# inside the pass-1 encode, so neither the embedding payload nor the
-# 8x-unpivoted (s, code, x1..x8) rows ever cross back through Arrow.
-_PQ_STATS_SCHEMA = "s int, code int, n long, " + ", ".join(
-    f"x{j} long" for j in range(1, PQ_SUBDIM + 1)
-)
-
-
-def _pq_encode_stats_factory(cbn: "np.ndarray"):
-    """Pass-1 PQ encode (identical left-fold distances / first-min
-    tiebreak as _pq_encode_factory) fused with the per-(s, code)
-    training sums: member count and exact int64 micro sums of the
-    normalized subspace components (see _micro_halfup)."""
-    import pandas as pd
-
-    def fn(batches):
-        n_acc = np.zeros((PQ_M, PQ_K), dtype=np.int64)
-        x_acc = np.zeros((PQ_M, PQ_K, PQ_SUBDIM), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            micro = _micro_halfup(vn)
-            for s in range(PQ_M):
-                acc = np.zeros((vecs.shape[0], cbn.shape[0]))
-                for i in range(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM):
-                    d = vn[:, i : i + 1] - cbn[None, :, i]
-                    acc += d * d
-                pos = acc.argmin(axis=1)
-                np.add.at(n_acc[s], pos, 1)
-                np.add.at(
-                    x_acc[s],
-                    pos,
-                    micro[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM],
-                )
-        live = np.argwhere(n_acc > 0)
-        out = {
-            "s": np.array([int(s) for s, _c in live], dtype="int32"),
-            "code": np.array([int(c) for _s, c in live], dtype="int32"),
-            "n": np.array([n_acc[s, c] for s, c in live], dtype=np.int64),
-        }
-        for j in range(PQ_SUBDIM):
-            out[f"x{j + 1}"] = np.array(
-                [x_acc[s, c, j] for s, c in live], dtype=np.int64
-            )
-        yield pd.DataFrame(out)
-
-    return fn
-
-
-def _pq_stats_trained(
-    stats: DataFrame,
-) -> dict[int, tuple[list[int], "np.ndarray"]]:
-    """Reduce a per-(s, code) stats pass to the trained codebooks:
-    {s: (codes ascending, k_s x {PQ_SUBDIM} matrix of _micro_mean)}."""
-    aggs = [F.sum("n").alias("n")] + [
-        F.sum(f"x{j}").alias(f"x{j}") for j in range(1, PQ_SUBDIM + 1)
-    ]
-    all_rows = stats.groupBy("s", "code").agg(*aggs).collect()
-    trained: dict[int, tuple[list[int], "np.ndarray"]] = {}
-    for s in range(PQ_M):
-        rows = sorted(
-            (r for r in all_rows if r["s"] == s), key=lambda r: r["code"]
-        )
-        trained[s] = (
-            [r["code"] for r in rows],
-            np.array(
-                [
-                    [
-                        _micro_mean(r[f"x{j}"], r["n"])
-                        for j in range(1, PQ_SUBDIM + 1)
-                    ]
-                    for r in rows
-                ],
-                dtype=np.float64,
-            ).reshape(-1, PQ_SUBDIM),
-        )
-    return trained
-
-
-def _pq_train(
-    spark: SparkSession, sf_dir: str, corpus: DataFrame
-) -> dict[int, tuple[list[int], "np.ndarray"]]:
+def _pq_train(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> list:
     """One quantized-Lloyd iteration for ALL {PQ_M} subspaces in ONE
-    job: pass-1 encode against the fixed codebook FUSED with the
-    per-(s, code) training sums (r13 — the previous shape shipped the
-    embedding back through Arrow and unpivoted 8x rows into a decimal
-    hash aggregate; the sums are bit-equal int64 micro arithmetic, see
+    job: the pass-1 encode against the fixed codebook is the kernel's
+    stats pass, so only per-(s, code) int64 micro sums of the
+    normalized subspace components leave it (r13 — the previous shape
+    shipped the embedding back through Arrow and unpivoted 8x rows into
+    a decimal hash aggregate; the sums are bit-equal, see
     _micro_halfup). Still exactly one execution of the encode pass
     (pinned by tests/test_plan_audit.py's job audit).
-    Returns {s: (codes ascending, k_s x {PQ_SUBDIM} centroid matrix)}."""
-    cbn0 = _pq_fixed_cbn(spark, sf_dir)
-    stats = corpus.mapInPandas(
-        _pq_encode_stats_factory(cbn0), schema=_PQ_STATS_SCHEMA
-    )
-    return _pq_stats_trained(stats)
-
-
-def _pq_trained_tab_rows(q_rows, trained) -> list[tuple]:
-    """ADC distance tables for the trained codebooks: per (query,
-    subspace, code) the squared L2 between the NORMALIZED query
-    subvector and the trained sub-centroid, on the integer micro grid.
-    Bounded: {N_QUERIES} x {PQ_M} x {PQ_K} rows."""
-    import math
-
-    tab_rows = []
-    for r in q_rows:
-        v = np.array([r["embedding"]], dtype=np.float64)
-        vq = (v / _leftfold_norms(v)[:, None])[0]
-        for s in range(PQ_M):
-            codes_s, cents_s = trained[s]
-            acc = np.zeros(cents_s.shape[0])
-            for j in range(PQ_SUBDIM):
-                d = vq[s * PQ_SUBDIM + j] - cents_s[:, j]
-                acc += d * d
-            tab_rows += [
-                (
-                    int(r["vec_id"]),
-                    s,
-                    int(codes_s[p]),
-                    int(math.floor(acc[p] * 1e6 + 0.5)),
-                )
-                for p in range(len(codes_s))
-            ]
-    return tab_rows
+    Returns {PQ_M} (codes ascending, k_s x {PQ_SUBDIM} centroid matrix)."""
+    subs0 = _pq_fixed_subs(spark, sf_dir)
+    stats = corpus.mapInPandas(*_nn_kernel("stats", subs=subs0, normalize=True))
+    return _stats_codebooks(stats, PQ_SUBDIM)[0]
 
 
 @query("sim_ann_pq_lloyd", oracle=_pq_lloyd_oracle())
@@ -2539,13 +2308,15 @@ def sim_ann_pq_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rerank as sim_ann_pq_adc. The full train -> encode -> search
     sequence replays bit-for-bit in DuckDB.
 
-    Scale shape (100 TB): pass-1 encode and pass-2 encode are each one
-    mapInPandas pass; the per-subspace centroid update is ONE hash
-    aggregate per subspace over (code, 8 decimal sums) — map-side
-    combinable, 16-row outputs; the only collects are the 8x16
-    codebook rollups and 20 query vectors. Training cost is K x
-    (map + agg) like the IVF fit; a production run iterates the same
-    two steps to convergence.
+    Scale shape (100 TB): pass-1 and pass-2 encode are each one
+    mapInPandas pass of the nearest-codeword kernel. Pass 1 is its
+    stats pass: per task it emits one row per live (s, code) with the
+    member count and 8 int64 micro sums, and the centroid update for
+    all {PQ_M} subspaces is ONE fused (s, code) bigint hash aggregate
+    over those — map-side combinable, <= 128 rows out. The only
+    collects are that 8x16 codebook rollup and 20 query vectors.
+    Training cost is K x (map + agg) like the IVF fit; a production
+    run iterates the same two steps to convergence.
 
     Reference: completes the ANN ladder's training story — fixed
     codebooks proved the search path (sim_ann_pq_adc), this proves the
@@ -2562,20 +2333,13 @@ def sim_ann_pq_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     trained = _pq_train(spark, sf_dir, corpus)
     # r12 opt: ADC consumes only (vec_id, codes) — narrow output (§4.1)
-    codes2 = corpus.mapInPandas(
-        _pq_encode_trained_factory(trained, emit_embedding=False),
-        schema=_PQ_CODES_NARROW_SCHEMA,
-    )
+    codes2 = corpus.mapInPandas(*_nn_kernel("codes", subs=trained, normalize=True))
 
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    q_ids, q = _query_vectors(corpus)
+    tab_rows = _adc_rows(
+        [(i,) for i in q_ids], q / _leftfold_norms(q)[:, None], trained
     )
-    tab_rows = _pq_trained_tab_rows(q_rows, trained)
     return _pq_adc_rerank(spark, corpus, codes2, tab_rows)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -2748,12 +2512,14 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     knee; full grid at IVFPQ_PROBE).
 
     Scale shape (100 TB): training is the Lloyd fit (K x (map + agg))
-    plus the PQ sub-centroid update (ONE unpivoted hash aggregate, 128
-    rows out); ingest is one assignment pass + two encode passes
-    (mapInPandas, codebooks in closures); per query the candidate set
-    is {IVFPQ_PROBE}/{IVF_CELLS} of the corpus, each candidate costing
-    {PQ_M} integer lookups via broadcast table join (whole-stage
-    codegen, no Python); the rerank reads {PQ_RERANK} float vectors.
+    plus the PQ sub-centroid update (one kernel stats pass and ONE
+    fused (s, code) bigint hash aggregate, 128 rows out); ingest is
+    ONE fused inverted-file plus codes pass (the kernel's codes mode,
+    codebooks in the closure, no embedding shipped back); per query
+    the candidate set is {IVFPQ_PROBE}/{IVF_CELLS} of the corpus, each
+    candidate costing {PQ_M} integer lookups via broadcast table join
+    (whole-stage codegen, no Python); the rerank reads {PQ_RERANK}
+    float vectors.
     Sub-linear candidates x 32x-compressed scoring x constant rerank —
     the composition the ANN ladder was built toward, with every stage's
     arithmetic replayable in DuckDB."""
@@ -2761,27 +2527,23 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # more assignment pass -> C2 (r13: fused stats pass, bit-equal
     # micro-sum means), inverted file over C2
     corpus, cells1, c1 = _lloyd_c1(spark, sf_dir)
-    _rows, cells2, c2 = _km_stats_rows(
-        corpus.mapInPandas(
-            _km_assign_stats_factory(c1, cells1), schema=_KM_STATS_SCHEMA
-        )
-    )
+    cells2, c2, _rows = _lloyd_step(corpus, cells1, c1)
     # PQ codebook: TRAINED sub-centroids (the sim_ann_pq_lloyd trainer,
-    # one unpivoted job) — codebook quality is the measured big recall
+    # one fused stats job) — codebook quality is the measured big recall
     # lever for the composition (see the IVFPQ_PROBE grid above)
     trained = _pq_train(spark, sf_dir, corpus)
     # r12 opt: inverted file + trained encode FUSED into one narrow
-    # mapInPandas pass (identical arithmetic to the two passes it
-    # replaces), persisted because the final plan reads it twice (the
-    # probe join and the exploded ADC input). Bounded: one codes row
-    # per vector.
+    # kernel pass (raw-space cell, normalized-space codes), persisted
+    # because the final plan reads it twice (the probe join and the
+    # exploded ADC input). Bounded: one codes row per vector.
     from motorway_spark.maintenance import CACHES
 
     inv_codes = CACHES.persist_swap(
         "ivfpq.inv_codes",
         corpus.mapInPandas(
-            _ivfpq_invfile_codes_factory(c2, cells2, trained),
-            schema=_IVFPQ_INV_CODES_SCHEMA,
+            *_nn_kernel(
+                "codes", (cells2, c2), trained, normalize=True, raw_coarse=True
+            )
         ),
         exclusive=False,
     )
@@ -2789,23 +2551,15 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = inv_codes
 
     # driver-side: probe lists vs C2 + trained PQ ADC tables (20 queries)
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    q_ids, q = _query_vectors(corpus)
+    probe_pairs = [
+        (qid, cells2[p])
+        for qid, ps in zip(q_ids, _probe_positions(q, c2, IVFPQ_PROBE))
+        for p in ps
+    ]
+    tab_rows = _adc_rows(
+        [(i,) for i in q_ids], q / _leftfold_norms(q)[:, None], trained
     )
-    probe_pairs = []
-    for r in q_rows:
-        v = np.array(r["embedding"], dtype=np.float64)
-        acc = np.zeros(c2.shape[0])
-        for i in range(DIM):
-            d = v[i] - c2[:, i]
-            acc += d * d
-        order = sorted(range(len(cells2)), key=lambda p: (acc[p], cells2[p]))
-        probe_pairs += [
-            (int(r["vec_id"]), cells2[p]) for p in order[:IVFPQ_PROBE]
-        ]
-    tab_rows = _pq_trained_tab_rows(q_rows, trained)
 
     probe = F.broadcast(
         spark.createDataFrame(probe_pairs, "query_id long, cell int")
@@ -2911,170 +2665,6 @@ def _res_c2n_mean_sql(i: int) -> str:
     """Component i of a cell's NORMALIZED-space centroid: the
     integer-exact half-up mean over members' embedding[i]/nrm."""
     return _km_mean_sql(f"(CAST(e.embedding[{i}] AS DOUBLE) / e.nrm)")
-
-
-def _resn_assign_factory(cents: "np.ndarray", cells: list[int]):
-    """_km_assign_factory on the UNIT SPHERE: nearest-cell assignment
-    of the NORMALIZED vector (left-fold distances, lowest-cell
-    tiebreak). The whole residual index lives in normalized space —
-    cells are angular regions, which is the FAISS cosine-metric setup
-    (normalize, then L2 everywhere)."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            acc = np.zeros((vn.shape[0], cents.shape[0]))
-            for i in range(vn.shape[1]):
-                d = vn[:, i : i + 1] - cents[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": [cells[p] for p in pos],
-                    "d": acc[np.arange(len(pos)), pos],
-                }
-            )
-
-    return fn
-
-
-def _res_factory(
-    cents: "np.ndarray",
-    cells: list[int],
-    codebooks: dict[int, tuple[list[int], "np.ndarray"]],
-    emit_residuals: bool,
-):
-    """mapInPandas factory for the residual pipeline: assign the
-    NORMALIZED vector to its coarse cell (``cents`` rows are the
-    normalized-space centroids, ascending ``cells`` order so argmin's
-    first-min = the oracle's ORDER BY d, cell), subtract that
-    centroid to form the residual, and encode each residual subspace
-    against ``codebooks`` (codes ascending -> ORDER BY d, code).
-    ``emit_residuals`` adds r1..r{DIM} columns for the training
-    aggregate (pass 1); pass 2 emits codes only."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            acc = np.zeros((vn.shape[0], cents.shape[0]))
-            for i in range(vn.shape[1]):
-                d = vn[:, i : i + 1] - cents[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            res = vn - cents[pos]
-            out = {
-                "vec_id": pdf["vec_id"],
-                "cell": np.array([cells[p] for p in pos], dtype="int32"),
-            }
-            for s in range(PQ_M):
-                codes_s, cents_s = codebooks[s]
-                a2 = np.zeros((res.shape[0], cents_s.shape[0]))
-                for j in range(PQ_SUBDIM):
-                    d = (
-                        res[:, s * PQ_SUBDIM + j : s * PQ_SUBDIM + j + 1]
-                        - cents_s[None, :, j]
-                    )
-                    a2 += d * d
-                p2 = a2.argmin(axis=1)
-                out[f"c{s}"] = np.array(
-                    [codes_s[p] for p in p2], dtype="int32"
-                )
-            if emit_residuals:
-                for i in range(DIM):
-                    out[f"r{i + 1}"] = res[:, i]
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-_RES_CODES_SCHEMA = "vec_id long, cell int, " + ", ".join(
-    f"c{s} int" for s in range(PQ_M)
-)
-_RES_PASS1_SCHEMA = (
-    _RES_CODES_SCHEMA + ", " + ", ".join(f"r{i} double" for i in range(1, DIM + 1))
-)
-
-
-def _res_train_stats_factory(
-    cents: "np.ndarray",
-    cells: list[int],
-    codebooks: dict[int, tuple[list[int], "np.ndarray"]],
-):
-    """_res_factory's pass-1 (assign -> residual -> encode against the
-    init codebooks) fused with the per-(s, code) training sums over the
-    RESIDUAL components (r13): exact int64 micro partial sums replace
-    the 64-double residual payload + stack unpivot + decimal aggregate.
-    Identical assignment/encode arithmetic; _micro_halfup quantizes the
-    same residual doubles the Arrow pass used to ship."""
-    import pandas as pd
-
-    def fn(batches):
-        n_acc = np.zeros((PQ_M, PQ_K), dtype=np.int64)
-        x_acc = np.zeros((PQ_M, PQ_K, PQ_SUBDIM), dtype=np.int64)
-        code_idx: dict[int, dict[int, int]] = {
-            s: {c: i for i, c in enumerate(codebooks[s][0])}
-            for s in range(PQ_M)
-        }
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = vecs / _leftfold_norms(vecs)[:, None]
-            acc = np.zeros((vn.shape[0], cents.shape[0]))
-            for i in range(vn.shape[1]):
-                d = vn[:, i : i + 1] - cents[None, :, i]
-                acc += d * d
-            pos = acc.argmin(axis=1)
-            res = vn - cents[pos]
-            micro = _micro_halfup(res)
-            for s in range(PQ_M):
-                codes_s, cents_s = codebooks[s]
-                a2 = np.zeros((res.shape[0], cents_s.shape[0]))
-                for j in range(PQ_SUBDIM):
-                    d = (
-                        res[:, s * PQ_SUBDIM + j : s * PQ_SUBDIM + j + 1]
-                        - cents_s[None, :, j]
-                    )
-                    a2 += d * d
-                p2 = a2.argmin(axis=1)
-                slot = np.array(
-                    [code_idx[s][codes_s[p]] for p in p2], dtype=np.int64
-                )
-                np.add.at(n_acc[s], slot, 1)
-                np.add.at(
-                    x_acc[s],
-                    slot,
-                    micro[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM],
-                )
-        inv_codes = {
-            s: {i: c for c, i in code_idx[s].items()} for s in range(PQ_M)
-        }
-        live = np.argwhere(n_acc > 0)
-        out = {
-            "s": np.array([int(s) for s, _c in live], dtype="int32"),
-            "code": np.array(
-                [int(inv_codes[int(s)][int(c)]) for s, c in live],
-                dtype="int32",
-            ),
-            "n": np.array([n_acc[s, c] for s, c in live], dtype=np.int64),
-        }
-        for j in range(PQ_SUBDIM):
-            out[f"x{j + 1}"] = np.array(
-                [x_acc[s, c, j] for s, c in live], dtype=np.int64
-            )
-        yield pd.DataFrame(out)
-
-    return fn
 
 
 def _ivfpq_res_oracle() -> str:
@@ -3283,18 +2873,19 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the normalized fixed init; residual init codebook = the same
     16 fixed PQ vectors re-expressed as their own residuals (so init
     magnitudes match residual magnitudes); one quantized-Lloyd
-    refinement over residual members (the _pq_train shape: ONE
-    unpivoted stack -> (s, code) hash aggregate, 128 rows out, encode
-    executions bounded); re-encode; then a CELL-AWARE ADC — the
-    query's distance table is computed per probed cell because the
-    query residual differs per cell (FAISS's per-list table), joined
-    on (query, cell, s, code) as broadcast integer lookups; floats
-    only at the {IVFPQ_RES_RERANK}-row exact rerank.
+    refinement over residual members (the _pq_train shape: one kernel
+    stats pass -> ONE (s, code) bigint hash aggregate, 128 rows out);
+    re-encode; then a CELL-AWARE ADC — the query's distance table is
+    computed per probed cell because the query residual differs per
+    cell (FAISS's per-list table), joined on (query, cell, s, code) as
+    broadcast integer lookups; floats only at the
+    {IVFPQ_RES_RERANK}-row exact rerank.
 
-    Scale shape (100 TB): per Lloyd iteration one mapInPandas
-    assignment pass + one <= {IVF_CELLS}-row hash aggregate of {DIM}
-    decimal sums (map-side combinable); ingest is one assignment +
-    two encode passes; the ADC table is per probed cell
+    Scale shape (100 TB): per Lloyd iteration one kernel stats pass +
+    one <= {IVF_CELLS}-row hash aggregate of {DIM} bigint micro sums
+    (map-side combinable); the residual codebook trains in one more
+    stats pass; ingest is ONE fused assign + residual-encode pass (the
+    kernel's codes mode); the ADC table is per probed cell
     ({IVFPQ_RES_PROBE} x {PQ_M} x {PQ_K} rows per query, still a
     broadcast constant); candidates per query DROP by the probe
     ratio vs the raw operator; the rerank reads {IVFPQ_RES_RERANK}
@@ -3318,7 +2909,7 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # normalized-space coarse quantizer: IVFPQ_RES_COARSE_ITERS Lloyd iterations on the
     # unit sphere from the normalized fixed init (c0 -> a1 -> c1 ->
-    # a2 -> c2); each iteration = one assignment pass + one <=8-row
+    # a2 -> c2); each iteration = one kernel stats pass + one <=8-row
     # hash aggregate of DIM integer-exact normalized means
     init_rows = (
         Catalog(spark, sf_dir)
@@ -3330,29 +2921,24 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()
     )
-    iv = np.array([r["embedding"] for r in init_rows], dtype=np.float64)
+    iv = _matrix(init_rows)
     cents = iv / _leftfold_norms(iv)[:, None]
     cells = list(range(IVF_CELLS))
     # r13: each coarse iteration is the fused normalized stats pass —
     # per-cell int64 micro sums of element/nrm (bit-equal to the old
     # _km_mean_sql decimal aggregate over the Arrow-returned corpus)
     for _ in range(IVFPQ_RES_COARSE_ITERS):
-        _rows, cells, cents = _km_stats_rows(
-            corpus.mapInPandas(
-                _km_assign_stats_factory(cents, cells, normalize=True),
-                schema=_KM_STATS_SCHEMA,
-            )
-        )
-    cell_pos = {c: k for k, c in enumerate(cells)}
+        cells, cents, _rows = _lloyd_step(corpus, cells, cents, normalize=True)
     # NOTE r12 opt: no separate inverted-file assignment pass — the
     # trained-encode pass (codes2 below) assigns each vector's cell
     # with the identical normalized left-fold arithmetic, so its cell
     # column IS the inverted file. One full mapInPandas pass removed
     # (guide §1.2: fewer passes).
+    coarse = (cells, cents)
 
     # residual init codebook: the 16 fixed PQ vectors as their own
     # residuals (init magnitudes match residual magnitudes)
-    cb_rows = (
+    cbv = _matrix(
         emb.filter(
             (F.col("vec_id") >= PQ_CB_LO) & (F.col("vec_id") <= PQ_CB_HI)
         )
@@ -3360,30 +2946,18 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()
     )
-    cbv = np.array([r["embedding"] for r in cb_rows], dtype=np.float64)
     cbn = cbv / _leftfold_norms(cbv)[:, None]
-    acc = np.zeros((cbn.shape[0], cents.shape[0]))
-    for i in range(DIM):
-        d = cbn[:, i : i + 1] - cents[None, :, i]
-        acc += d * d
-    cbres_full = cbn - cents[acc.argmin(axis=1)]
-    init = {
-        s: (
-            list(range(PQ_K)),
-            cbres_full[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM],
-        )
-        for s in range(PQ_M)
-    }
+    init = _pq_split(cbn - cents[_sq_dists(cbn, cents).argmin(axis=1)])
 
     # train: pass-1 residual encode FUSED with the (s, code) training
     # sums (r13 — previously the pass shipped 64 residual doubles per
     # vector back through Arrow into a stack unpivot + decimal
     # aggregate; the int64 micro sums are bit-equal, see _micro_halfup)
-    trained = _pq_stats_trained(
+    trained, _rows = _stats_codebooks(
         corpus.mapInPandas(
-            _res_train_stats_factory(cents, cells, init),
-            schema=_PQ_STATS_SCHEMA,
-        )
+            *_nn_kernel("stats", coarse, init, normalize=True, residual=True)
+        ),
+        PQ_SUBDIM,
     )
 
     # Persisted: the final plan references the trained codes TWICE
@@ -3393,52 +2967,25 @@ def sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes2 = CACHES.persist_swap(
         "ivfpq_res.codes",
         corpus.mapInPandas(
-            _res_factory(cents, cells, trained, emit_residuals=False),
-            schema=_RES_CODES_SCHEMA,
+            *_nn_kernel("codes", coarse, trained, normalize=True, residual=True)
         ),
         exclusive=False,
     )
 
     # driver-side: probe lists + per-(query, cell) residual ADC tables
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    q_ids, q = _query_vectors(corpus)
+    qn = q / _leftfold_norms(q)[:, None]
+    probed = [
+        (k, p)
+        for k, ps in enumerate(_probe_positions(qn, cents, IVFPQ_RES_PROBE))
+        for p in ps
+    ]
+    probe_pairs = [(q_ids[k], cells[p]) for k, p in probed]
+    tab_rows = _adc_rows(
+        probe_pairs,
+        np.array([qn[k] - cents[p] for k, p in probed]).reshape(-1, DIM),
+        trained,
     )
-    import math
-
-    probe_pairs = []
-    tab_rows = []
-    for r in q_rows:
-        v = np.array(r["embedding"], dtype=np.float64)
-        qn = (v / _leftfold_norms(v[None, :])[:, None])[0]
-        qacc = np.zeros(cents.shape[0])
-        for i in range(DIM):
-            d = qn[i] - cents[:, i]
-            qacc += d * d
-        order = sorted(
-            range(len(cells)), key=lambda p: (qacc[p], cells[p])
-        )
-        for p in order[:IVFPQ_RES_PROBE]:
-            cell = cells[p]
-            probe_pairs.append((int(r["vec_id"]), cell))
-            qres = qn - cents[cell_pos[cell]]
-            for s in range(PQ_M):
-                codes_s, cents_s = trained[s]
-                sacc = np.zeros(cents_s.shape[0])
-                for j in range(PQ_SUBDIM):
-                    d = qres[s * PQ_SUBDIM + j] - cents_s[:, j]
-                    sacc += d * d
-                tab_rows += [
-                    (
-                        int(r["vec_id"]),
-                        cell,
-                        s,
-                        int(codes_s[p2]),
-                        int(math.floor(sacc[p2] * 1e6 + 0.5)),
-                    )
-                    for p2 in range(len(codes_s))
-                ]
 
     probe = F.broadcast(
         spark.createDataFrame(probe_pairs, "query_id long, cell int")

@@ -1711,13 +1711,13 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from motorway_spark.catalog import Catalog
     from motorway_spark.queries.similarity import (
-        _PQ_CODES_NARROW_SCHEMA,
+        _adc_rows,
+        _leftfold_norms,
+        _nn_kernel,
         _pq_adc_rerank,
-        _pq_encode_factory,
-        _pq_fixed_cbn,
-        _pq_fixed_tab_rows,
+        _pq_fixed_subs,
+        _query_vectors,
         _valid_vectors,
-        N_QUERIES,
     )
     from motorway_spark.sinks.upsert import UpsertParquetSink
     from motorway_spark.streaming.runner import stream_embeddings
@@ -1728,7 +1728,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="stream_ann_ingest_")
     _LAST_ANN_INGEST_DIR = root
 
-    cbn = _pq_fixed_cbn(spark, sf_dir)
+    subs = _pq_fixed_subs(spark, sf_dir)
     sink = UpsertParquetSink(
         spark, f"{root}/codes", key_cols=["vec_id"], num_buckets=8
     )
@@ -1737,8 +1737,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12 opt: codes-only encode output — the registry never stores
         # the floats, so don't ship them back through Arrow (§4.1)
         codes = _valid_vectors(bdf).mapInPandas(
-            _pq_encode_factory(cbn, emit_embedding=False),
-            schema=_PQ_CODES_NARROW_SCHEMA,
+            *_nn_kernel("codes", subs=subs, normalize=True)
         )
         sink.upsert_batch(codes, batch_id)
 
@@ -1786,12 +1785,11 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _valid_vectors(Catalog(spark, sf_dir).embeddings).select(
         "vec_id", "embedding"
     )
-    q_rows = (
-        corpus.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    q_ids, q = _query_vectors(corpus)
+    tab_rows = _adc_rows(
+        [(i,) for i in q_ids], q / _leftfold_norms(q)[:, None], subs
     )
-    out = _pq_adc_rerank(spark, corpus, codes, _pq_fixed_tab_rows(q_rows, cbn))
+    out = _pq_adc_rerank(spark, corpus, codes, tab_rows)
     # survives the next invocation's rmtree of this run's table dir
     return out.localCheckpoint(eager=True)
 

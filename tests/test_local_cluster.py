@@ -193,17 +193,15 @@ _R9_SCRIPT = _PRELUDE + r"""
 # here = the whole pipeline replays bit-for-bit even when every stage
 # crosses process boundaries.
 #
-# Two deployment realities this scenario surfaces that the Lloyd pair
-# didn't: (1) the PQ encode closures reference the module-level
-# _leftfold_norms, so cloudpickle ships them BY REFERENCE — executor
-# Python workers must be able to import motorway_spark, exactly what
-# spark-submit --py-files / a cluster pip install provides; the repo
-# root on executorEnv.PYTHONPATH is that rung here (the Lloyd assign
-# closure is self-contained by value, which is why it never needed it —
-# without it, executors crash-loop on ModuleNotFoundError until the
-# master removes the app). (2) 2 GiB executors: the trained chain's
-# Arrow encode workers + broadcast ADC tables exceed the harness
-# default 1 GiB.
+# Two deployment settings this scenario uses that the Lloyd pair
+# doesn't: (1) the repo root on executorEnv.PYTHONPATH, the rung
+# spark-submit --py-files / a cluster pip install provides. The PQ
+# encode closures no longer need it: the nearest-codeword kernel and
+# the helpers it calls (_sq_dists, _leftfold_norms, _micro_halfup) are
+# built nested-origin, so cloudpickle ships them BY VALUE, like the
+# Lloyd assign closure; tests/test_kernel_pickle.py pins that without
+# a cluster. (2) 2 GiB executors: the trained chain's Arrow encode
+# workers + broadcast ADC tables exceed the harness default 1 GiB.
 def cluster_session_2g(app):
     b = (
         SparkSession.builder.master("local-cluster[2,2,2048]")
